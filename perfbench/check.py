@@ -31,27 +31,42 @@ def _digest(con, rel: str, cols: list[str]) -> tuple[int, int]:
     return int(n), int(h)
 
 
-def registry_digests(engine_arrow, oracle_sql: str, data_dir: str, tables, threads: int):
-    """Return ``(engine_digest, oracle_digest)``; a digest is
-    ``(columns, rows, hash)``."""
-    con = _connect(threads)
-    for t in tables:
-        path = os.path.join(data_dir, f"{t}.parquet")
-        if os.path.exists(path):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
-    oracle = con.execute(oracle_sql).fetch_arrow_table()
-    con.register("eng_raw", engine_arrow)
-    con.register("orc_raw", oracle)
-    e_cols, o_cols = sorted(engine_arrow.column_names), sorted(oracle.column_names)
-    if e_cols != o_cols:
-        return (tuple(e_cols), engine_arrow.num_rows, 0), (tuple(o_cols), oracle.num_rows, 0)
-    types = dict(con.execute("SELECT column_name, column_type FROM (DESCRIBE orc_raw)").fetchall())
-    casts = ", ".join(f'CAST("{c}" AS {types[c]}) AS "{c}"' for c in o_cols)
-    con.execute(f"CREATE VIEW eng AS SELECT {casts} FROM eng_raw")
-    con.execute(f"CREATE VIEW orc AS SELECT {casts} FROM orc_raw")
-    out = (tuple(e_cols), *_digest(con, "eng", o_cols)), (tuple(o_cols), *_digest(con, "orc", o_cols))
-    con.close()
-    return out
+class Oracle:
+    """A registry key's DuckDB oracle on one directory, run once; engine
+    results are then digested against its columns and types.  A digest
+    is ``(columns, rows, hash)``."""
+
+    def __init__(self, oracle_sql: str, data_dir: str, tables, threads: int):
+        self.con = _connect(threads)
+        for t in tables:
+            path = os.path.join(data_dir, f"{t}.parquet")
+            if os.path.exists(path):
+                self.con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
+        oracle = self.con.execute(oracle_sql).fetch_arrow_table()
+        self.cols = sorted(oracle.column_names)
+        self.con.register("orc_raw", oracle)
+        types = dict(
+            self.con.execute("SELECT column_name, column_type FROM (DESCRIBE orc_raw)").fetchall()
+        )
+        self.casts = ", ".join(f'CAST("{c}" AS {types[c]}) AS "{c}"' for c in self.cols)
+        self.digest = self._digest_of("orc_raw")
+
+    def _digest_of(self, rel: str) -> tuple:
+        self.con.execute(f"CREATE OR REPLACE VIEW cast_rel AS SELECT {self.casts} FROM {rel}")
+        return (tuple(self.cols), *_digest(self.con, "cast_rel", self.cols))
+
+    def engine_digest(self, engine_arrow) -> tuple:
+        cols = sorted(engine_arrow.column_names)
+        if cols != self.cols:
+            return (tuple(cols), engine_arrow.num_rows, 0)
+        self.con.register("eng_raw", engine_arrow)
+        try:
+            return self._digest_of("eng_raw")
+        finally:
+            self.con.unregister("eng_raw")
+
+    def close(self) -> None:
+        self.con.close()
 
 
 ORDERS_COLS = [

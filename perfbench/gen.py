@@ -2,14 +2,12 @@
 
 Every table is built with numpy from one ``seed`` and written with
 pyarrow, so the same seed gives byte-identical parquet files.  The
-schemas are those of the engine's fixture tables (TPC-H-ish star schema,
-``events``, ``documents``, ``embeddings``); the engine only ever sees
-the written files.
+schemas are those of the engine's fixture tables (``orders``,
+``documents``, ``embeddings``); the engine only ever sees the written
+files.
 
-Three input sets:
+Two input sets:
 
-* :func:`write_fixture` — the read-side star schema at half the sf0.1
-  scale (orders 75k, lineitem 300k, customer 7.5k, events 50k).
 * :class:`ChangeFeed` — the incremental-sync change feed
   against a generated ``orders`` snapshot: updates of existing keys,
   intra-batch duplicate keys, unchanged re-deliveries of the previous
@@ -17,6 +15,16 @@ Three input sets:
   cursor filter must drop.
 * :func:`write_corpus` — ``documents`` with planted exact and near
   duplicates, and clustered ``embeddings``.
+
+The traffic mix is chosen, not measured.  The reference pipeline's
+documented behaviour (SURVEY.md: K2 MERGE, ST3 re-delivered rows are
+MERGE no-ops, A1/A7 duplicate keys deduplicated before the MERGE) says
+which kinds of rows a change feed holds, but no source gives their
+shares.  The shares below (``UPDATE_SHARE`` ... ``STALE_SHARE``) and the
+corpus planting rates in :func:`write_corpus` are unverified values that
+decide how a MERGE splits between its update, insert and no-op branches
+and how many candidate pairs LSH emits; a change tuned to this mix is
+tuned to these assumptions.
 """
 
 from __future__ import annotations
@@ -33,13 +41,9 @@ EPOCH = dt.datetime(1970, 1, 1)
 DAY_US = 86_400 * 1_000_000
 ORDERS_START = dt.datetime(1995, 1, 1)
 ORDERS_DAYS = 2404  # 1995-01-01 .. 2001-08-01, as in the sf0.1 fixture
-EVENTS_START = dt.datetime(2024, 1, 1)
 
 STATUSES = np.array(["O", "F", "P"])
 PRIORITIES = np.array(["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"])
-SEGMENTS = np.array(["AUTOMOBILE", "BUILDING", "FURNITURE", "HOUSEHOLD", "MACHINERY"])
-REGIONS = ["AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST"]
-EVENT_TYPES = np.array(["signup", "click", "error", "view", "purchase"])
 LANGS = np.array(["en", "de", "fr", "es", "zh"])
 LANG_P = [0.41, 0.15, 0.15, 0.15, 0.14]
 WORDS = np.array(
@@ -49,7 +53,7 @@ WORDS = np.array(
     "node task stage commit snapshot delta schema record field event".split()
 )
 
-# incremental_sync batch mix, as shares of the batch size
+# incremental_sync batch mix, as shares of the batch size (chosen, unverified)
 UPDATE_SHARE = 0.70
 DUP_SHARE = 0.08
 REDELIVER_SHARE = 0.10
@@ -89,95 +93,6 @@ def orders_table(rng: np.random.Generator, n: int = 150_000, n_cust: int = 15_00
             "o_orderpriority": pa.array(PRIORITIES[rng.integers(0, 5, n)]),
         }
     )
-
-
-def write_fixture(out_dir: str, seed: int, scale: float = 0.5) -> dict[str, int]:
-    """Read-side star schema + events at ``scale`` x sf0.1; returns rows
-    per table."""
-    os.makedirs(out_dir, exist_ok=True)
-    rng = np.random.default_rng([seed, 1])
-    rows = {}
-    n_orders, n_cust = int(150_000 * scale), int(15_000 * scale)
-    n_li, n_events, n_users = int(600_000 * scale), int(100_000 * scale), 1500
-    rows["region"] = _write(
-        pa.table(
-            {
-                "r_regionkey": pa.array(np.arange(5, dtype=np.int32)),
-                "r_name": pa.array(REGIONS),
-            }
-        ),
-        os.path.join(out_dir, "region.parquet"),
-    )
-    rows["nation"] = _write(
-        pa.table(
-            {
-                "n_nationkey": pa.array(np.arange(25, dtype=np.int32)),
-                "n_name": pa.array([f"NATION_{i}" for i in range(25)]),
-                "n_regionkey": pa.array(np.arange(25, dtype=np.int32) % 5),
-            }
-        ),
-        os.path.join(out_dir, "nation.parquet"),
-    )
-    rows["customer"] = _write(
-        pa.table(
-            {
-                "c_custkey": pa.array(np.arange(n_cust, dtype=np.int64)),
-                "c_name": pa.array([f"Customer#{i:09d}" for i in range(n_cust)]),
-                "c_nationkey": pa.array(rng.integers(0, 25, n_cust, dtype=np.int32)),
-                "c_acctbal": pa.array(np.round(rng.uniform(-999, 9999, n_cust), 2)),
-                "c_mktsegment": pa.array(SEGMENTS[rng.integers(0, 5, n_cust)]),
-            }
-        ),
-        os.path.join(out_dir, "customer.parquet"),
-    )
-    rows["orders"] = _write(
-        orders_table(rng, n_orders, n_cust), os.path.join(out_dir, "orders.parquet")
-    )
-    # lineitem: 1..7 lines per order, truncated to n_li rows
-    lines = rng.integers(1, 8, n_orders)
-    okey = np.repeat(np.arange(n_orders, dtype=np.int64), lines)[:n_li]
-    starts = np.cumsum(lines) - lines
-    lnum = (np.arange(len(okey)) - np.repeat(starts, lines)[:n_li] + 1).astype(np.int32)
-    n = len(okey)
-    perm = rng.permutation(n)
-    rows["lineitem"] = _write(
-        pa.table(
-            {
-                "l_orderkey": pa.array(okey[perm]),
-                "l_partkey": pa.array(rng.integers(0, 20_000, n, dtype=np.int64)),
-                "l_suppkey": pa.array(rng.integers(0, 1000, n, dtype=np.int64)),
-                "l_linenumber": pa.array(lnum[perm]),
-                "l_quantity": pa.array(rng.integers(1, 51, n).astype(np.float64)),
-                "l_extendedprice": pa.array(np.round(rng.uniform(900, 105_000, n), 2)),
-                "l_discount": pa.array(rng.integers(0, 11, n) / 100.0),
-                "l_tax": pa.array(rng.integers(0, 9, n) / 100.0),
-                "l_returnflag": pa.array(np.array(["A", "N", "R"])[rng.integers(0, 3, n)]),
-                "l_linestatus": pa.array(np.array(["O", "F"])[rng.integers(0, 2, n)]),
-                "l_shipdate": _ts(
-                    _us(ORDERS_START) + rng.integers(0, ORDERS_DAYS + 60, n) * DAY_US
-                ),
-            }
-        ),
-        os.path.join(out_dir, "lineitem.parquet"),
-    )
-    # events: unique timestamps over 30 days, shuffled against event_id
-    spacing = 30 * DAY_US // n_events
-    slot = rng.permutation(n_events)
-    ts = _us(EVENTS_START) + slot * spacing + rng.integers(0, spacing, n_events)
-    rows["events"] = _write(
-        pa.table(
-            {
-                "event_id": pa.array(np.arange(n_events, dtype=np.int64)),
-                "ts": _ts(ts),
-                "user_id": pa.array(rng.integers(0, n_users, n_events, dtype=np.int64)),
-                "event_type": pa.array(EVENT_TYPES[rng.integers(0, 5, n_events)]),
-                "value": pa.array(np.round(rng.exponential(60.0, n_events), 2)),
-                "props": pa.array([f'{{"k": {k}}}' for k in rng.integers(0, 100, n_events)]),
-            }
-        ),
-        os.path.join(out_dir, "events.parquet"),
-    )
-    return rows
 
 
 def batch_name(b: int) -> str:
@@ -286,8 +201,9 @@ def write_corpus(out_dir: str, seed: int, n_docs: int = 2500, n_vectors: int = 1
     """``documents`` with planted duplicates and clustered ``embeddings``.
 
     Of every 100 docs, 4 are exact copies and 6 are near copies (3 words
-    substituted) of an earlier doc; the planted (original, copy) id pairs
-    are returned for the LSH recall ratio."""
+    substituted) of an earlier doc, rates chosen without a measured
+    source; the planted (original, copy) id pairs are returned for the
+    LSH recall ratio."""
     os.makedirs(out_dir, exist_ok=True)
     rng = np.random.default_rng([seed, 3])
     lengths = rng.integers(8, 90, n_docs)

@@ -1,6 +1,6 @@
 """Write one generated input set and print what was written as JSON.
 
-    python3 perfbench/gen_main.py {fixture|corpus} OUT_DIR SEED
+    python3 perfbench/gen_main.py corpus OUT_DIR SEED
 """
 
 from __future__ import annotations
@@ -15,8 +15,6 @@ from perfbench import gen  # noqa: E402
 
 
 def main(kind: str, out_dir: str, seed: int) -> dict:
-    if kind == "fixture":
-        return {"rows": gen.write_fixture(out_dir, seed)}
     if kind == "corpus":
         c = gen.write_corpus(out_dir, seed)
         return {

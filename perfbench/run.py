@@ -16,25 +16,74 @@ Python temp dirs inside the work dir, ``SPARK_DRIVER_MEMORY`` = 3g (the
 engine defaults to 16g), ``TZ`` = UTC.
 
 Warm-up policy: ``setup_s`` runs from process start until the session is
-up, the workload is prepared and the untimed warm-up is done (two
-passes of the registry keys, the first of which collects their results
-for the checks, or one sync batch after the seed snapshot is written),
-minus input
-generation, which is the benchmark's own work.  JVM start and the first
-JIT-heavy runs land there, not in the op latencies.  The JVM cannot be
-restarted within a run, so set-up is measured once per run; its median
-over runs is what compares.
+up, the workload is prepared and the untimed warm-up is done, minus
+input generation, which is the benchmark's own work.  Warm-up is two
+passes of the registry keys, or five sync batches after the seed
+snapshot is written (the first batches run at about 2.3x, 1.4x, 1.2x
+the settled batch time, and batches keep getting a little faster for
+about ten more).  The seconds of each warm-up pass or batch are
+printed.  JVM start and the first JIT-heavy runs land in set-up, not in
+the op latencies.  The JVM cannot be restarted within a run, so set-up
+is measured once per run; its median over runs is what compares.
 
 Measurement: a run measures a fixed amount of work, ``--seconds`` worth
 of rounds at the workload's reference round time ``ROUND_S`` (a round is
 a whole pass over the workload's keys, or one sync batch), and never
 fewer rounds than 11 ops need, so the tail has 10 samples beyond it.
 Work, not wall time, is fixed so that every run holds the same op mix
-and sample count whatever the speed of the host or of the engine.  ``--trace 0`` prints the end-to-end metrics; ``--trace 1``
-measures one untraced phase, then installs the span recorder
-(``trace.py``) and measures a traced phase of the same length, prints
-the per-layer metrics and writes every span to
-``.perfbench_work/spans-<workload>-<seed>.json``.
+and sample count whatever the speed of the host or of the engine.
+``op_p50_s`` and ``op_tail_s`` are Harrell-Davis quantile estimates
+(``stats.py``).  ``op_tail_s`` is at the highest percentile with 10
+samples beyond it, so its percentile grows with the number of ops: at
+``--seconds 15`` it is p60 of 25 ops on ``corpus_dedup`` and p9 of 11
+on ``incremental_sync``, a low quantile rather than a tail there.  The
+percentile and sample count are printed with it.  ``--trace 0``
+prints the end-to-end metrics; ``--trace 1`` measures one untraced
+phase, then installs the span recorder (``trace.py``) and measures a
+traced phase of the same length, prints the per-layer metrics and
+writes every span to ``.perfbench_work/spans-<workload>-<seed>.json``.
+
+Host speed: the host's other tenants slow every op of a run alike, up
+to twice as slow from one run to the next.  After each op the driver
+loop times a fixed engine-free task (``hostspeed.py``), untimed, and the
+end-to-end times are reported at the reference host speed: each is multiplied,
+and each rate divided, by ``REF_S / median(probe times)`` of the
+measured phase.  The values as measured and the factor are printed
+beside them.  On ten runs of each workload at ``--seconds 15`` on a
+shared 4-vCPU host, this cut the spread (IQR / median) of ``op_p50_s``
+from 0.22 to 0.07 on ``incremental_sync`` and from 0.12 to 0.08 on
+``corpus_dedup``, and of ``ops_per_s`` from 0.25 to 0.07 and from 0.12
+to 0.08.  The probe is single-threaded, so it under-corrects when the
+host is so busy that the engine's four task threads lose more than one
+thread does.
+
+Checks: every measured op's own output is checked, untimed, and a
+failed check counts in ``error_rate`` and ``failed``.  A registry op's
+Arrow result is saved after the op and hashed against its key's DuckDB
+oracle at the end of the run; the cold first call of each key is
+checked too, as an extra check.  A sync batch is checked through the
+final snapshot, which every batch went into: it must match a DuckDB
+replay of all batches, and the cursor table the last batch's cursor.
+
+Per-layer metric -> end-to-end metric it should move (workload):
+
+* ``session.get_spark_s`` -> ``setup_s`` (all)
+* ``catalog.load_*``, ``queries.build_s``,
+  ``queries.py4j_calls_per_build`` -> ``op_p50_s`` (corpus_dedup)
+* ``queries.exec_s`` -> ``ops_per_s`` (corpus_dedup)
+* ``plans.entity_sync_plan_s``, ``operators.dedup_keep_latest_s``,
+  ``operators.merge_upsert_s``, ``state.*`` -> ``op_p50_s``
+  (incremental_sync)
+* ``operators.spark_{jobs,stages,tasks}_per_op`` -> ``op_p50_s`` (all)
+* ``sources.read_snapshot_s``, ``sources.write_snapshot_s`` ->
+  ``op_p50_s``, ``rows_per_s`` (incremental_sync)
+* ``sources.expire_snapshots_s`` -> ``ops_per_s`` (incremental_sync; it
+  runs in one batch of five, so it moves the mean, not the median or
+  the low quantile ``op_tail_s`` reads)
+* ``sources.bytes_written_per_op``, ``sources.files_written_per_op``,
+  ``write_amp`` -> ``rows_per_s`` (incremental_sync)
+* ``extensions.*`` -> ``op_p50_s``, ``rows_per_s`` (corpus_dedup)
+* ``peak_rss_mb`` -> ``retained_mb`` (all)
 
 Memory: ``retained_mb`` is the JVM heap still live after a full GC at
 the end of the measured ops plus the Python resident set; the peak RSS
@@ -52,6 +101,7 @@ import time
 T_PROCESS = time.perf_counter()
 
 import argparse  # noqa: E402
+import gc  # noqa: E402
 import json  # noqa: E402
 import math  # noqa: E402
 import os  # noqa: E402
@@ -67,18 +117,18 @@ from dataclasses import dataclass, field  # noqa: E402
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
-from perfbench import stats  # noqa: E402
+from perfbench import hostspeed, stats  # noqa: E402
 from perfbench.trace import Recorder, instrument, job_counts  # noqa: E402
 from perfbench.workloads import WORKLOADS, CorpusDedup  # noqa: E402
 
 DRIVER_MEMORY = "3g"
-MAX_MEASURE_S = 60  # safety stop for one phase on a pathologically slow host
 RUN_LIMIT_S = 170  # a run must end within 180 s
 
 
 @dataclass
 class Phase:
     latencies: list[float] = field(default_factory=list)
+    probes: list[float] = field(default_factory=list)  # host speed probe times
     keys: list[str] = field(default_factory=list)
     rows: int = 0
     raised: list[bool] = field(default_factory=list)
@@ -161,15 +211,23 @@ def proc_status_mb(pid, field: str) -> float:
     return 0.0
 
 
-def retained_mb(spark) -> float:
+def retained_mb(spark) -> tuple[float, float]:
     """Memory the driver holds once the ops are done: the JVM heap still
-    live after a full collection plus the Python process's resident set.
-    Caches, broadcast blocks and retained plans count; garbage and heap
-    headroom do not."""
+    live after a full collection, and the Python process's resident set.
+    Caches, broadcast blocks and retained plans count; garbage, heap
+    headroom and allocator free lists do not."""
+    import pyarrow as pa
+
+    gc.collect()
+    pa.default_memory_pool().release_unused()
     jvm = spark.sparkContext._jvm
-    jvm.java.lang.System.gc()
+    # the first collection hands dead broadcast and shuffle handles to
+    # Spark's ContextCleaner, which drops their blocks; the second frees them
+    for _ in range(2):
+        jvm.java.lang.System.gc()
+        time.sleep(0.5)
     rt = jvm.java.lang.Runtime.getRuntime()
-    return (rt.totalMemory() - rt.freeMemory()) / 2**20 + proc_status_mb("self", "VmRSS")
+    return (rt.totalMemory() - rt.freeMemory()) / 2**20, proc_status_mb("self", "VmRSS")
 
 
 def jvm_proc():
@@ -219,10 +277,7 @@ def measure(wl, rec, spark, rounds: int, traced: bool) -> Phase:
     ph = Phase()
     before = (wl.bytes_written, wl.files_written, wl.input_bytes)
     sc = spark.sparkContext
-    start = time.perf_counter()
     for _ in range(rounds):
-        if time.perf_counter() - start >= MAX_MEASURE_S:
-            break
         for op in wl.round():
             n = len(ph.latencies)
             if traced:
@@ -232,10 +287,10 @@ def measure(wl, rec, spark, rounds: int, traced: bool) -> Phase:
             t0 = time.perf_counter()
             try:
                 with rec.span(f"op:{op.key}"):
-                    op.run()
+                    out = op.run()
                 raised = False
             except Exception:
-                raised = True
+                out, raised = None, True
                 traceback.print_exc()
             ph.latencies.append(time.perf_counter() - t0)
             ph.raised.append(raised)
@@ -244,7 +299,9 @@ def measure(wl, rec, spark, rounds: int, traced: bool) -> Phase:
             ph.rows += op.rows
             if traced:
                 ph.jobs.append(job_counts(spark, group))
-            wl.after_op(op)
+            wl.after_op(op, out)
+            out = None  # not alive while the next op runs
+            ph.probes.extend(hostspeed.probe() for _ in range(hostspeed.PER_OP))
     ph.bytes_written, ph.files_written, ph.input_bytes = (
         now - then
         for now, then in zip((wl.bytes_written, wl.files_written, wl.input_bytes), before)
@@ -258,14 +315,16 @@ def metric(value: float, unit: str) -> dict:
     return {"value": value, "unit": unit}
 
 
-def end_to_end(ph: Phase, setup_s: float, mem_mb: float) -> tuple[dict, str]:
+def end_to_end(ph: Phase, setup_s: float, mem_mb: float, f: float = 1.0) -> tuple[dict, str]:
+    """The end-to-end metrics, times multiplied and rates divided by the
+    host speed factor ``f``."""
     tail, pct = stats.tail(ph.latencies)
     m = {
-        "setup_s": metric(setup_s, "s"),
-        "op_p50_s": metric(statistics.median(ph.latencies), "s"),
-        "op_tail_s": metric(tail, "s"),
-        "ops_per_s": metric(ph.ops_per_s, "1/s"),
-        "rows_per_s": metric(ph.rows / ph.busy_s, "rows/s"),
+        "setup_s": metric(setup_s * f, "s"),
+        "op_p50_s": metric(stats.quantile(ph.latencies, 0.5) * f, "s"),
+        "op_tail_s": metric(tail * f, "s"),
+        "ops_per_s": metric(ph.ops_per_s / f, "1/s"),
+        "rows_per_s": metric(ph.rows / ph.busy_s / f, "rows/s"),
         "retained_mb": metric(mem_mb, "MiB"),
     }
     note = f"op_tail_s is p{pct:.1f} of n={len(ph.latencies)} ops ({stats.TAIL_BEYOND} beyond it)"
@@ -386,12 +445,15 @@ def main(argv=None) -> int:
         rounds = max(
             math.ceil(args.seconds / wl.ROUND_S), math.ceil(min_ops / wl.OPS_PER_ROUND)
         )
+        ticks = hostspeed.host_ticks()
         untraced = measure(wl, rec, spark, rounds, False)
+        steal = hostspeed.steal_share(ticks, hostspeed.host_ticks())
         traced = None
         if args.trace:
             instrument(rec, spark)
             traced = measure(wl, rec, spark, rounds, True)
-        mem_mb = retained_mb(spark)
+        jvm_mb, py_mb = retained_mb(spark)
+        mem_mb = jvm_mb + py_mb
         pids = ["self"] + ([jvm_proc().pid] if jvm_proc() else [])
         peak_rss_mb = sum(proc_status_mb(pid, "VmHWM") for pid in pids)
         wl.finish()
@@ -400,7 +462,7 @@ def main(argv=None) -> int:
     try:
         # DuckDB checks run while the JVM shuts down
         t = time.perf_counter()
-        checks = wl.check(args.corrupt_expected)
+        verdicts, extra_checks = wl.check(args.corrupt_expected)
         check_s = time.perf_counter() - t
     finally:
         wait_jvm(jvm)
@@ -409,13 +471,11 @@ def main(argv=None) -> int:
         layer_m, summary = per_layer(wl, rec, untraced, traced, get_spark_s, peak_rss_mb)
 
     phases = [untraced] + ([traced] if traced else [])
-    attempted = sum(len(p.latencies) for p in phases)
-    # an op fails if it raised, or if its key's output check failed
-    failed = sum(
-        raised or not checks.get(k, False)
-        for p in phases
-        for k, raised in zip(p.keys, p.raised)
-    )
+    raised = [r for p in phases for r in p.raised]
+    attempted = len(raised)
+    # an op fails if it raised or if its own output failed its check
+    failed = sum(r or not ok for r, ok in zip(raised, verdicts))
+    correct = failed == 0 and all(extra_checks.values())
     write_amp = (
         untraced.bytes_written / untraced.input_bytes if untraced.input_bytes else 0.0
     )
@@ -432,23 +492,34 @@ def main(argv=None) -> int:
         print(f"spans written to {os.path.relpath(path, ROOT)}")
         metrics = layer_m
     else:
-        metrics, tail_note = end_to_end(untraced, setup_s, mem_mb)
+        f = hostspeed.factor(untraced.probes)
+        metrics, tail_note = end_to_end(untraced, setup_s, mem_mb, f)
+        raw, _ = end_to_end(untraced, setup_s, mem_mb)
         for k, v in metrics.items():
-            print(f"{k} = {v['value']:.6g} {v['unit']}")
+            print(f"{k} = {v['value']:.6g} {v['unit']} (as measured: {raw[k]['value']:.6g})")
         print(tail_note)
+        print(
+            f"host speed factor {f:.4f} (probe median"
+            f" {statistics.median(untraced.probes) * 1e3:.2f} ms, reference"
+            f" {hostspeed.REF_S * 1e3:.2f} ms); host steal {steal:.4f} of all CPU time"
+        )
+
     print(f"error_rate = {failed / attempted:.6g} ratio ({failed}/{attempted})")
     print(f"write_amp = {write_amp:.6g} ratio")
     print(f"peak_rss_mb = {peak_rss_mb:.6g} MiB")
-    if "warmup_s" in wl.extra:
-        print(f"warm-up s per key: {wl.extra['warmup_s']}")
+    print(f"retained: JVM live heap {jvm_mb:.1f} MiB + Python RSS {py_mb:.1f} MiB")
+    print(f"warm-up s per pass or batch: {wl.extra['warmup_s']}")
     print(
         "op latencies (s): "
         + " ".join(f"{k}={v:.3f}" for k, v in zip(untraced.keys, untraced.latencies))
     )
-    print("checks: " + ", ".join(f"{k}={'ok' if v else 'WRONG'}" for k, v in checks.items()))
+    print(
+        f"checks: {sum(verdicts)}/{len(verdicts)} measured outputs ok"
+        + "".join(f", {k}={'ok' if v else 'WRONG'}" for k, v in extra_checks.items())
+    )
     print(
         json.dumps(
-            {"correct": failed == 0, "attempted": attempted, "failed": failed, "metrics": metrics}
+            {"correct": correct, "attempted": attempted, "failed": failed, "metrics": metrics}
         )
     )
     return 0

@@ -1,9 +1,12 @@
-"""The three workloads: generated inputs, untimed preparation, the ops a
+"""The two workloads: generated inputs, untimed preparation, the ops a
 round runs, and the output checks.
 
-An op is one callable; the driver loop in ``run.py`` times it.  A round
-is a whole pass (every registry key once, in a seeded order) or one sync
-batch, so every measured run holds the same mix of keys.
+An op is one callable; the driver loop in ``run.py`` times it and then,
+untimed, hands its output to :meth:`after_op`.  A round is a whole pass
+(every registry key once, in a seeded order) or one sync batch, so every
+measured run holds the same mix of keys.  :meth:`check` returns one
+verdict per measured op, in the order the ops ran, plus named extra
+checks (warm-up outputs) that do not count as ops.
 """
 
 from __future__ import annotations
@@ -18,6 +21,8 @@ import time
 from dataclasses import dataclass
 from typing import Callable
 
+import pyarrow.feather as feather
+
 from perfbench import check, gen
 
 HERE = os.path.dirname(os.path.abspath(__file__))
@@ -26,7 +31,7 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 @dataclass
 class Op:
     key: str
-    run: Callable[[], None]
+    run: Callable[[], object]  # returns the op's output, or None
     rows: int
 
 
@@ -42,17 +47,19 @@ def _generate(kind: str, out_dir: str, seed: int) -> dict:
     return json.loads(res.stdout.strip().splitlines()[-1])
 
 
-def _noop_write(df) -> None:
-    """The op's one action: run the whole plan, keep nothing."""
-    df.write.format("noop").mode("overwrite").save()
-
-
 class RegistryWorkload:
-    """Closed-loop passes over registry keys on a generated directory."""
+    """Closed-loop passes over registry keys on a generated directory.
+
+    An op is ``fn(spark, dir)`` followed by one action, ``toArrow()``,
+    which runs the whole plan and brings the result to the driver.  Every
+    op's result is written to disk untimed and checked against the key's
+    oracle when the run ends, so ``error_rate`` counts each measured op
+    on its own output."""
 
     KEYS: dict[str, tuple[str, ...]] = {}  # key -> tables it reads
     GEN_KIND = ""
     ROUND_S = 0.0  # seconds one pass takes on the reference 4-CPU host
+    WARMUP_PASSES = 2
 
     @property
     def OPS_PER_ROUND(self) -> int:
@@ -63,14 +70,18 @@ class RegistryWorkload:
 
     def __init__(self, work: str, seed: int, threads: int, recorder):
         self.dir = os.path.join(work, "data")
+        self.out = os.path.join(work, "results")
         self.seed, self.threads, self.recorder = seed, threads, recorder
         self.passes = 0
         self.extra: dict = {}
+        self.warm: dict[str, str | None] = {}  # key -> first output's file
+        self.measured: list[tuple[str, str | None]] = []  # (key, output file)
 
     def generate(self) -> None:
         info = _generate(self.GEN_KIND, self.dir, self.seed)
         self.rows = info["rows"]
         self.extra.update(info)
+        os.makedirs(self.out, exist_ok=True)
 
     def prepare(self, spark) -> None:
         from data_pipeline_bigquery_spark.queries import registry
@@ -79,28 +90,36 @@ class RegistryWorkload:
         reg = registry()
         self.specs = {k: reg[k] for k in self.KEYS}
 
+    def _save(self, name: str, result) -> str | None:
+        if result is None:
+            return None
+        path = os.path.join(self.out, f"{name}.arrow")
+        feather.write_feather(result, path, compression="uncompressed")
+        return path
+
     def warmup(self) -> None:
-        """Two untimed passes.  The first collects every key's result for
-        :meth:`check` (the measured runs repeat the same computation on the
-        same files); the second runs the measured op, so the first measured
-        pass is as warm as the last."""
-        self.results = {}
-        for key in self.round_keys():
+        """``WARMUP_PASSES`` untimed passes of the measured op.  The first
+        call of each key is cold (JIT, codegen); its output is kept as an
+        extra check.  Seconds per pass go to ``warmup_s``."""
+        curve = []
+        for p in range(self.WARMUP_PASSES):
             t = time.perf_counter()
-            self.results[key] = self.specs[key].fn(self.spark, self.dir).toArrow()
-            self.extra.setdefault("warmup_s", {})[key] = round(time.perf_counter() - t, 3)
-        for op in self.round():
-            op.run()
+            for op in self.round():
+                result = op.run()
+                if p == 0:
+                    self.warm[op.key] = self._save(f"warm-{op.key}", result)
+            curve.append(round(time.perf_counter() - t, 3))
+        self.extra["warmup_s"] = curve
 
     def _op(self, key: str) -> Op:
         fn = self.specs[key].fn
         rec = self.recorder
 
-        def run() -> None:
+        def run():
             with rec.span("queries.build"):
                 df = fn(self.spark, self.dir)
             with rec.span("queries.exec"):
-                _noop_write(df)
+                return df.toArrow()
 
         return Op(key, run, sum(self.rows[t] for t in self.KEYS[key]))
 
@@ -113,47 +132,51 @@ class RegistryWorkload:
     def round(self) -> list[Op]:
         return [self._op(k) for k in self.round_keys()]
 
-    def after_op(self, op: Op) -> None:
-        pass
+    def after_op(self, op: Op, result) -> None:
+        n = len(self.measured)
+        self.measured.append((op.key, self._save(f"op-{n}", result)))
 
     def finish(self) -> None:
         pass
 
-    def check(self, corrupt: bool) -> dict[str, bool]:
-        """Per key: does the engine's result hash-match its oracle?"""
+    def check(self, corrupt: bool) -> tuple[list[bool], dict[str, bool]]:
+        """Does each output hash-match its key's oracle?  Returns one
+        verdict per measured op and one extra check per warm-up key."""
         from data_pipeline_bigquery_spark.catalog import FIXTURE_TABLES
 
-        ok = {}
-        for key, arrow in sorted(self.results.items()):
-            eng, orc = check.registry_digests(
-                arrow, self.specs[key].oracle, self.dir, FIXTURE_TABLES, self.threads
+        oracles = {}
+        for key in sorted(self.KEYS):
+            oracles[key] = check.Oracle(
+                self.specs[key].oracle, self.dir, FIXTURE_TABLES, self.threads
             )
             if corrupt:
-                orc = (orc[0], orc[1], orc[2] + 1)
-            ok[key] = eng == orc
-            if not ok[key]:
-                print(f"check FAILED {key}: engine={eng} oracle={orc}", file=sys.stderr)
-            self.inspect(key, arrow)
-        return ok
+                cols, rows, h = oracles[key].digest
+                oracles[key].digest = (cols, rows, h + 1)
+
+        def verdict(key: str, path: str | None, what: str) -> bool:
+            if path is None:
+                return False
+            arrow = feather.read_table(path)
+            got = oracles[key].engine_digest(arrow)
+            if got != oracles[key].digest:
+                print(
+                    f"check FAILED {what} {key}: engine={got} oracle={oracles[key].digest}",
+                    file=sys.stderr,
+                )
+                return False
+            return True
+
+        extra = {f"warmup:{k}": verdict(k, p, "warm-up") for k, p in sorted(self.warm.items())}
+        per_op = [verdict(k, p, f"op {i}") for i, (k, p) in enumerate(self.measured)]
+        for key, path in self.warm.items():
+            if path is not None:
+                self.inspect(key, feather.read_table(path))
+        for o in oracles.values():
+            o.close()
+        return per_op, extra
 
     def inspect(self, key: str, arrow) -> None:
         pass
-
-
-class PipelineReads(RegistryWorkload):
-    GEN_KIND = "fixture"
-    ROUND_S = 5.0
-    KEYS = {
-        "pipeline_entity_sync": ("orders",),
-        "pipeline_change_log": ("events",),
-        "pipeline_association_edges": ("lineitem",),
-        "pipeline_email_read_log": ("events",),
-        "pipeline_reverse_etl": ("events",),
-        "merge_upsert": ("orders",),
-        "join_agg_revenue_by_nation": ("lineitem", "orders", "customer", "nation", "region"),
-        "topk_per_group": ("orders",),
-        "dedup_keep_first": ("events",),
-    }
 
 
 class CorpusDedup(RegistryWorkload):
@@ -188,6 +211,7 @@ class IncrementalSync:
     OBJECT = "orders"
     ROUND_S = 2.0  # seconds one batch takes on the reference 4-CPU host
     OPS_PER_ROUND = 1
+    WARMUP_BATCHES = 5
     EXPIRE_EVERY = 5
     KEEP_LAST = 2
     EMITTED_AT = dt.datetime(2026, 1, 1)
@@ -199,6 +223,7 @@ class IncrementalSync:
         self.cursors = os.path.join(work, "store", "_cursor")
         self.extra: dict = {}
         self.applied: list[int] = []
+        self.measured: list[str] = []
         self.bytes_written = 0
         self.files_written = 0
         self.input_bytes = 0
@@ -220,10 +245,16 @@ class IncrementalSync:
         self._scan_writes()
 
     def warmup(self) -> None:
-        # writing the seed snapshot in prepare() already ran the write path
-        for op in self.round():
-            op.run()
-            self.after_op(op)
+        """``WARMUP_BATCHES`` untimed batches: the first ones still pay
+        for JIT and codegen.  Seconds per batch go to ``warmup_s``."""
+        curve = []
+        for _ in range(self.WARMUP_BATCHES):
+            for op in self.round():
+                t = time.perf_counter()
+                op.run()
+                curve.append(round(time.perf_counter() - t, 3))
+        self._scan_writes()
+        self.extra["warmup_s"] = curve
 
     def round(self) -> list[Op]:
         from data_pipeline_bigquery_spark import catalog
@@ -276,17 +307,21 @@ class IncrementalSync:
                 nfiles += 1
         return nbytes, nfiles
 
-    def after_op(self, op: Op) -> None:
+    def after_op(self, op: Op, result) -> None:
         nbytes, nfiles = self._scan_writes()
         self.bytes_written += nbytes
         self.files_written += nfiles
+        self.measured.append(op.key)
 
     def finish(self) -> None:
         from data_pipeline_bigquery_spark.sources.snapshots import list_versions
 
         self.latest = list_versions(self.spark, self.store)[-1]
 
-    def check(self, corrupt: bool) -> dict[str, bool]:
+    def check(self, corrupt: bool) -> tuple[list[bool], dict[str, bool]]:
+        """The final snapshot, which every measured batch went into, must
+        match the replay, and the cursor table the last batch's cursor.
+        The verdict holds for every measured batch."""
         eng = check.snapshot_digest(os.path.join(self.store, f"v={self.latest}"), self.threads)
         want = check.replay_digest(
             os.path.join(self.changes, "orders.parquet"),
@@ -307,11 +342,10 @@ class IncrementalSync:
                 f"cursor={got_cursor} want={final_cursor}",
                 file=sys.stderr,
             )
-        return {"sync_batch": ok}
+        return [ok] * len(self.measured), {}
 
 
 WORKLOADS = {
     "incremental_sync": IncrementalSync,
-    "pipeline_reads": PipelineReads,
     "corpus_dedup": CorpusDedup,
 }
