@@ -21,6 +21,8 @@ import uuid as _uuid
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_bigquery_spark.functions.sql import sql_str_lit
+
 
 def generate_emitted_info(now: _dt.datetime | None = None) -> tuple[_dt.datetime, str]:
     """Driver-side analog of ``genegrate_emitted_info`` (sic) — one
@@ -44,12 +46,10 @@ def zip_emitted_info(
         # one parsed selectExpr instead of 2-4 withColumn round-trip
         # chains (r14, guide §1.2); CAST('<s>' AS TIMESTAMP) is the
         # same tree F.lit(<s>).cast("timestamp") builds
-        at_lit = emitted_at.replace("'", "''")
-        id_lit = emitted_id.replace("'", "''")
         exprs = [
             "*",
-            f"CAST('{at_lit}' AS TIMESTAMP) AS emitted_at",
-            f"'{id_lit}' AS emitted_id",
+            f"CAST({sql_str_lit(emitted_at)} AS TIMESTAMP) AS emitted_at",
+            f"{sql_str_lit(emitted_id)} AS emitted_id",
         ]
         if archived_defaults:
             exprs += [

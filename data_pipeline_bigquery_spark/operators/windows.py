@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_bigquery_spark.functions.sql import sql_str_lit
+
 
 def _q(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
@@ -75,9 +77,8 @@ def group_concat(
             arr_sql = f"array_distinct({arr_sql})"
         if sort:
             arr_sql = f"array_sort({arr_sql})"
-        sep_lit = sep.replace("'", "''")
         return df.selectExpr(
-            "*", f"concat_ws('{sep_lit}', {arr_sql}) AS {_q(out_col)}"
+            "*", f"concat_ws({sql_str_lit(sep)}, {arr_sql}) AS {_q(out_col)}"
         )
     v = value
     w = Window.partitionBy(*partition_by)

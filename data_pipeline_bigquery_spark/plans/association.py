@@ -15,6 +15,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_bigquery_spark.functions.sql import sql_str_lit
 from data_pipeline_bigquery_spark.operators.joins import anti_join
 from data_pipeline_bigquery_spark.operators.metadata import zip_emitted_info
 
@@ -57,13 +58,13 @@ def association_edges_plan(
     # one parsed projection (r14, guide §1.2): the cast/lit/md5 Column
     # builds cost ~30 py4j round-trips; the md5 runs over the same
     # casted values the Column form concatenated
-    type_lit = edge_type.replace("'", "''")
+    type_lit = sql_str_lit(edge_type)
     df = df.selectExpr(
         "CAST(from_id AS STRING) AS from_id",
         "CAST(to_id AS STRING) AS to_id",
-        f"'{type_lit}' AS type",
+        f"{type_lit} AS type",
         "md5(concat_ws('_', CAST(from_id AS STRING),"
-        f" '{type_lit}', CAST(to_id AS STRING))) AS association_id",
+        f" {type_lit}, CAST(to_id AS STRING))) AS association_id",
     )
     if existing is not None:
         df = anti_join(

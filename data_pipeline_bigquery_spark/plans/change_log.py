@@ -18,6 +18,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_bigquery_spark.functions.sql import sql_str_lit
 from data_pipeline_bigquery_spark.functions.timestamps import to_epoch_millis
 from data_pipeline_bigquery_spark.operators.nested import serialize_row_json
 from data_pipeline_bigquery_spark.operators.windows import version_row_number
@@ -43,10 +44,7 @@ def change_log_plan(
     # ~6 py4j round-trips each at plan-build time; these strings parse
     # to the identical expression trees (get_json_object, CASE-free
     # casts, string literals)
-    def lit(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"
-
-    in_list = ", ".join(lit(t) for t in tracked_types)
+    in_list = ", ".join(sql_str_lit(t) for t in tracked_types)
     df = events.filter(f"event_type IN ({in_list})").selectExpr(
         "CAST(user_id AS STRING) AS object_id",
         "event_type AS field",
@@ -64,13 +62,13 @@ def change_log_plan(
         df, ["object_id", "field", "updated_value", "version"], out_col="raw"
     )
     if cursor is not None and isinstance(cursor, str):
-        df = df.filter(f"updated_at_date > CAST({lit(cursor)} AS TIMESTAMP)")
+        df = df.filter(f"updated_at_date > CAST({sql_str_lit(cursor)} AS TIMESTAMP)")
     elif cursor is not None:
         df = df.filter(F.col("updated_at_date") > F.lit(cursor).cast("timestamp"))
     emit = (
         [
-            f"CAST({lit(emitted_at)} AS TIMESTAMP) AS emitted_at",
-            f"{lit(emitted_id)} AS emitted_id",
+            f"CAST({sql_str_lit(emitted_at)} AS TIMESTAMP) AS emitted_at",
+            f"{sql_str_lit(emitted_id)} AS emitted_id",
         ]
         if isinstance(emitted_at, str)
         else None
@@ -83,7 +81,7 @@ def change_log_plan(
         "updated_value",
         "updated_at_timestamp",
         "updated_at_date",
-        f"{lit(object_type)} AS object_type",
+        f"{sql_str_lit(object_type)} AS object_type",
         *(emit or []),
     )
     if emit is None:

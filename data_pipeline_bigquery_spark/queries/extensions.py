@@ -22,7 +22,6 @@ from data_pipeline_bigquery_spark.extensions.dedup_text import (
     exact_dedup,
     lsh_candidate_pairs,
     minhash_signatures,
-    minhash_signatures_from_docs,
     ngram_jaccard_pairs,
     simhash_fingerprint,
     word_ngrams,

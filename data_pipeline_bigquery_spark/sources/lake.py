@@ -24,6 +24,45 @@ def fs_and_path(spark: SparkSession, p: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
+# Filename-tagged pointers: a ``<prefix><digits>`` empty file under a
+# dir carries one non-negative integer in its NAME (py4j content reads
+# copy the buffer; see ``snapshots.commit_epoch_snapshot``).  Prefixes
+# start with ``_`` so parquet readers skip the tags, and must hold no
+# glob metacharacters.
+
+
+def tagged_values(spark: SparkSession, base: str, prefix: str) -> list[int]:
+    """Values of the ``<prefix><int>`` tags under ``base``, ascending.
+    The name filter runs in the JVM, so the py4j cost is O(tags), not
+    O(files in ``base``)."""
+    fs, jbase = fs_and_path(spark, base)
+    if not fs.exists(jbase):
+        return []
+    out = []
+    name_filter = spark._jvm.org.apache.hadoop.fs.GlobFilter(f"{prefix}*")
+    for st in fs.listStatus(jbase, name_filter):
+        rest = st.getPath().getName()[len(prefix) :]
+        if rest.isdigit():
+            out.append(int(rest))
+    return sorted(out)
+
+
+def advance_tag(spark: SparkSession, base: str, prefix: str, value: int) -> None:
+    """Ratchet the ``<prefix>`` tag up to ``value``: create
+    ``<prefix><value>``, then drop smaller tags; a no-op when a tag at
+    or above ``value`` already exists.  A crash between create and drop
+    leaves extra tags; readers take the max, so the stragglers are
+    harmless and the next advance sweeps them."""
+    held = tagged_values(spark, base, prefix)
+    if held and held[-1] >= value:
+        return
+    fs, jbase = fs_and_path(spark, base)
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs.create(Path(jbase, f"{prefix}{value}")).close()
+    for old in held:
+        fs.delete(Path(jbase, f"{prefix}{old}"), False)
+
+
 def read_lake_prefix(spark: SparkSession, prefix: str, schema=None) -> DataFrame:
     """S14 parquet_lake_scan: one call, partition discovery included."""
     reader = spark.read

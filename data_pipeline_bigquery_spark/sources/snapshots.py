@@ -54,7 +54,11 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from data_pipeline_bigquery_spark.sources.lake import fs_and_path as _fs_and_path
+from data_pipeline_bigquery_spark.sources.lake import (
+    advance_tag as _advance_tag,
+    fs_and_path as _fs_and_path,
+    tagged_values as _tagged_values,
+)
 
 _MARKER = "_COMMITTED"
 
@@ -81,32 +85,6 @@ def list_versions(spark: SparkSession, base: str) -> list[int]:
 
 def _jpath(spark: SparkSession, parent, name: str):
     return spark._jvm.org.apache.hadoop.fs.Path(parent, name)
-
-
-def _tagged_values(spark: SparkSession, base: str, prefix: str) -> list[int]:
-    """Values of filename-encoded base-level tags (``<prefix><int>``)."""
-    fs, jbase = _fs_and_path(spark, base)
-    if not fs.exists(jbase):
-        return []
-    out = []
-    for st in fs.listStatus(jbase):
-        name = st.getPath().getName()
-        if name.startswith(prefix) and name[len(prefix) :].isdigit():
-            out.append(int(name[len(prefix) :]))
-    return sorted(out)
-
-
-def _advance_tag(spark: SparkSession, base: str, prefix: str, value: int):
-    """Create ``<prefix><value>``, then drop smaller tags.  A crash
-    between the two leaves extra tags; readers take the max, so the
-    stragglers are harmless and the next advance sweeps them."""
-    fs, jbase = _fs_and_path(spark, base)
-    target = _jpath(spark, jbase, f"{prefix}{value}")
-    if not fs.exists(target):
-        fs.create(target).close()
-    for old in _tagged_values(spark, base, prefix):
-        if old < value:
-            fs.delete(_jpath(spark, jbase, f"{prefix}{old}"), False)
 
 
 _LATEST_TAG = "_LATEST_"

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from data_pipeline_bigquery_spark.operators.dedup import dedup_keep_latest
 from data_pipeline_bigquery_spark.operators.merge import merge_upsert
 from data_pipeline_bigquery_spark.operators.metadata import generate_emitted_info, zip_emitted_info
+from data_pipeline_bigquery_spark.operators.observe import observed, standard_load_metrics
 from data_pipeline_bigquery_spark.state.cursor import CursorStore
 
 
@@ -55,6 +56,9 @@ def incremental_batch_run(
         batch = batch.filter(F.col(cursor_col) > F.lit(cursor))
     batch = dedup_keep_latest(batch, [pk], [cursor_col, pk])
     batch = zip_emitted_info(batch, emitted_at, emitted_id)
+    # row count and max cursor ride on the write job instead of two
+    # more jobs that would each recompute the filter and dedup
+    batch, obs = observed(batch, "incremental_batch", standard_load_metrics(pk, cursor_col))
 
     if os.path.exists(target_path):
         target = spark.read.parquet(target_path)
@@ -67,11 +71,10 @@ def incremental_batch_run(
     final = spark.read.parquet(staging)
     final.write.mode("overwrite").parquet(target_path)
 
-    n = batch.count()
-    max_cursor = batch.agg(F.max(cursor_col).alias("c")).first()["c"]
-    if max_cursor is not None:
-        cursor_store.append(object_name, max_cursor, emitted_at, emitted_id)
-    return n
+    metrics = obs.get
+    if metrics["max_cursor"] is not None:
+        cursor_store.append(object_name, metrics["max_cursor"], emitted_at, emitted_id)
+    return metrics["n_rows"]
 
 
 def streaming_upsert(

@@ -118,6 +118,23 @@ class TestIncrementalHarness:
         assert final == {1: "a", 2: "b2", 3: "c"}
         assert store.max_cursor("obj") == TS(2024, 1, 5)
 
+    def test_empty_batch_appends_no_cursor(self, spark, tmp_path):
+        store = CursorStore(spark, str(tmp_path / "cursor"))
+        target = str(tmp_path / "target")
+        schema = "id long, cursor timestamp, v string"
+        empty = spark.createDataFrame([], schema)
+        assert incremental_batch_run(spark, empty, target, store, "obj", "id", "cursor") == 0
+        assert store.max_cursor("obj") is None
+        assert not os.path.exists(str(tmp_path / "cursor"))
+
+        src = spark.createDataFrame([Row(id=1, cursor=TS(2024, 1, 3), v="a")], schema)
+        assert incremental_batch_run(spark, src, target, store, "obj", "id", "cursor") == 1
+        # every row is at or below the cursor: nothing new, no new cursor row
+        assert incremental_batch_run(spark, src, target, store, "obj", "id", "cursor") == 0
+        assert store.max_cursor("obj") == TS(2024, 1, 3)
+        assert spark.read.parquet(str(tmp_path / "cursor")).count() == 1
+        assert {r.id: r.v for r in spark.read.parquet(target).collect()} == {1: "a"}
+
 
 class TestStreamingUpsert:
     def test_stream_merges_and_dedups(self, spark, tmp_path):
