@@ -7,10 +7,11 @@ property discovery.  Here a single registry maps logical table names to
 Spark ``StructType``; the Spark session catalog (temp views) plays the
 role of the YAML metastore.
 
-Loaders read the driver's parquet fixtures with explicit schemas OFF
-(parquet is self-describing; Catalyst prunes columns and pushes filters
-into the scan), so the same code path works against a 100 TB partitioned
-lake directory.
+Loaders read the driver's parquet fixtures with no registry schema
+imposed: parquet is self-describing, so each table's schema comes from
+its own footer, and Catalyst prunes columns and pushes filters into the
+scan — the same code path works against a 100 TB partitioned lake
+directory.
 """
 
 from __future__ import annotations
@@ -19,6 +20,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from data_pipeline_bigquery_spark.sources.lake import parquet_schema
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -111,11 +114,10 @@ def _require_utc_session(spark: SparkSession, table: str, col: str) -> None:
 # Per-session plan/metadata cache for fixture reads (r13 optimization,
 # key hardened r14).
 #
-# ``spark.read.parquet(path)`` pays a schema-inference footer read plus
-# DataFrameReader py4j chatter on EVERY call — measured 150-250 ms per
-# ``load()`` at sf0.1, and the bench headliners call ``load`` 1-5 times
-# inside each timed run, making driver-side plan build 20-60% of some
-# recorded per-query times (OPTIMIZATION_r13.md "measure first" table).
+# Building the frame costs a driver-side footer read
+# (``sources.lake.parquet_schema``) plus DataFrameReader py4j chatter on
+# EVERY call, and the bench headliners call ``load`` 1-5 times inside
+# each timed run (OPTIMIZATION_r13.md "measure first" table).
 # A catalog is exactly the component whose job is to remember table
 # metadata, so ``load`` memoizes the normalized LAZY DataFrame per
 # (session, path, listing-fingerprint).  Nothing materialized is cached
@@ -181,7 +183,8 @@ def invalidate_plan_cache(spark: SparkSession | None = None) -> None:
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one fixture table. Plain ``spark.read.parquet`` so pushdown,
-    pruning, and partition discovery all apply.
+    pruning, and partition discovery all apply; the schema comes from
+    one footer read on the driver, so a cache miss starts no Spark job.
 
     Timestamp columns are normalized to ``TIMESTAMP`` instants at this
     boundary, whatever the file encoding — nanos-as-bigint (driver rounds
@@ -209,8 +212,10 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             "spark.sql.session.timeZone"
         ):
             return df
-    df = spark.read.parquet(path)
     from pyspark.sql import functions as F
+
+    schema = parquet_schema(spark, path)
+    df = (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
 
     nanos_cols = _NANOS_TS_COLUMNS.get(name, ())
     projected, changed, ntz_cast = [], False, False

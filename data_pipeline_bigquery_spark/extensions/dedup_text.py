@@ -159,6 +159,8 @@ def char_shingles(
 # One md5 per shingle instead of num_perm — the hash work drops num_perm×,
 # and the min-aggregate runs over longs, not 32-char strings.
 MINHASH_MOD = 2_147_483_647  # 2^31 - 1 (Mersenne prime)
+# the base hash as a SQL template over a shingle expression ``{s}``
+MINHASH_BASE_HASH_SQL = "cast(conv(substring(md5({s}), 1, 7), 16, 10) as long)"
 
 
 def minhash_perm_multiplier(j: int) -> int:
@@ -179,7 +181,7 @@ def minhash_signatures(shingles: DataFrame, num_perm: int = DEFAULT_NUM_PERM) ->
     # CreateNamedStruct away, leaving the identical per-column
     # HashAggregate plan (r13 VERDICT ask #8, same consolidation as the
     # fused bench-path builder)
-    base = F.expr("cast(conv(substring(md5(shingle), 1, 7), 16, 10) as long) AS __h")
+    base = F.expr(MINHASH_BASE_HASH_SQL.format(s="shingle") + " AS __h")
     with_base = shingles.select("doc_id", base)
     sig_sql = ", ".join(
         f"min(({minhash_perm_multiplier(j)} * __h + {j}) % {MINHASH_MOD}) AS sig_{j}"
@@ -227,7 +229,7 @@ def minhash_signatures_from_docs(
         "__t",
         k,
         stride,
-        elem_wrap="cast(conv(substring(md5({s}), 1, 7), 16, 10) as long)",
+        elem_wrap=MINHASH_BASE_HASH_SQL,
         prefolded=True,
     )
     # one selectExpr call instead of num_perm F.expr() Column builds:

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_bigquery_spark.functions.sql import sql_ident as q
 from data_pipeline_bigquery_spark.functions.text import (
     ascii_lower,
     ascii_lower_sql,
@@ -62,9 +63,6 @@ def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ~15); the strings parse to the same trees, duplicated per output
     column exactly as the reused Column objects were (whole-stage
     codegen CSEs the repeats either way)."""
-
-    def q(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
 
     t = ascii_lower_sql(q(text_col))
     words = f"split({t}, ' ')"

@@ -24,6 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from data_pipeline_bigquery_spark.functions.sql import sql_ident as q, sql_num_lit
+
 _TAG = "__asof_tag"
 
 
@@ -33,7 +35,7 @@ def asof_join(
     on: str,
     ts_col: str,
     value_cols: list[str],
-    tolerance_s: int | None = None,
+    tolerance_s: float | None = None,
     direction: str = "backward",
 ) -> DataFrame:
     """Append ``asof_<value_col>`` columns (and ``asof_ts``) to ``left``:
@@ -45,7 +47,12 @@ def asof_join(
     equal timestamps, matching pandas ``merge_asof``.
 
     ``tolerance_s``: max allowed |staleness| in seconds — matches
-    further away are nulled out (pandas ``merge_asof(tolerance=...)``).
+    further away are nulled out (pandas ``merge_asof(tolerance=...)``);
+    fractional values compare as given, never truncated.
+
+    Left columns named like an output (``asof_ts``, ``asof_<col>``) or
+    like an internal helper (``__asof_tag``, ``__asof_payload``,
+    ``__p``) are projected out first: outputs replace them.
 
     Forward is the mirrored union trick: the per-key window orders by
     ``(ts, tag DESC)`` so an equal-ts right row sorts AFTER the left
@@ -61,10 +68,10 @@ def asof_join(
     # operator sits inside the bench's timed region — the expression
     # trees below are the ones the Column form produced (same window
     # frame, same ignore-nulls picks), just built in ~6 parses
-    def q(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
-    lhs = left.selectExpr("*", f"1 AS {_TAG}")
+    outputs = {"asof_ts", *(f"asof_{c}" for c in value_cols)}
+    internal = {_TAG, "__asof_payload", "__p"}
+    keep = [c for c in left.columns if c not in outputs | internal]
+    lhs = left.selectExpr(*map(q, keep), f"1 AS {_TAG}")
     # the whole matched row travels as ONE struct (non-null for every
     # right row, even when an individual value is NULL): picking the
     # struct with first/last(ignorenulls) selects ts AND values from
@@ -73,7 +80,7 @@ def asof_join(
     # pandas merge_asof contract
     payload_fields = ", ".join(
         [f"'__rts', {q(ts_col)}"]
-        + [f"'__asof_{c}', {q(c)}" for c in value_cols]
+        + [f"'__v{i}', {q(c)}" for i, c in enumerate(value_cols)]
     )
     rhs = right.selectExpr(
         q(on),
@@ -105,16 +112,18 @@ def asof_join(
 
     if tolerance_s is None:
         asof_ts = "__p.__rts AS asof_ts"
-        vals = [f"__p.__asof_{c} AS asof_{c}" for c in value_cols]
+        vals = [
+            f"__p.__v{i} AS {q('asof_' + c)}" for i, c in enumerate(value_cols)
+        ]
     else:
-        fresh = f"({staleness}) <= {int(tolerance_s)}"
+        fresh = f"({staleness}) <= {sql_num_lit(tolerance_s)}"
         asof_ts = f"CASE WHEN {fresh} THEN __p.__rts END AS asof_ts"
         vals = [
-            f"CASE WHEN {fresh} THEN __p.__asof_{c} END AS asof_{c}"
-            for c in value_cols
+            f"CASE WHEN {fresh} THEN __p.__v{i} END AS {q('asof_' + c)}"
+            for i, c in enumerate(value_cols)
         ]
     return (
         both.selectExpr("*", f"{picked} AS __p")
         .filter(f"{_TAG} = 1")
-        .selectExpr(*[q(c) for c in left.columns], asof_ts, *vals)
+        .selectExpr(*map(q, keep), asof_ts, *vals)
     )

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from data_pipeline_bigquery_spark.functions.sql import sql_ident as q
+
 
 def dedup_keep_latest(
     df: DataFrame,
@@ -34,20 +36,14 @@ def dedup_keep_latest(
         # order column (r14, guide §1.2).  SQL DESC/ASC and Column
         # .desc()/.asc() share the same null ordering defaults
         # (DESC ⇒ NULLS LAST, ASC ⇒ NULLS FIRST), so the tree is
-        # identical to the Column form below.
-        def q(name: str) -> str:
-            return "`" + name.replace("`", "``") + "`"
-
+        # identical to the Column form below; withColumn replaces an
+        # input ``__rn`` just as that form does.
         dirn = "DESC" if descending else "ASC"
         rn = (
             f"row_number() OVER (PARTITION BY {', '.join(q(k) for k in keys)}"
             f" ORDER BY {', '.join(f'{q(c)} {dirn}' for c in order_by)})"
         )
-        return (
-            df.selectExpr("*", f"{rn} AS __rn")
-            .filter("__rn = 1")
-            .drop("__rn")
-        )
+        return df.withColumn("__rn", F.expr(rn)).filter("__rn = 1").drop("__rn")
     ordering = [
         (F.col(c) if isinstance(c, str) else c).desc() if descending
         else (F.col(c) if isinstance(c, str) else c).asc()

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from data_pipeline_bigquery_spark.functions.sql import sql_ident as q
+
 
 def merge_upsert(
     target: DataFrame,
@@ -86,20 +88,17 @@ def merge_upsert(
     # plans/r13/merge_upsert_{before,after}.txt).  Exchange count is
     # unchanged (both sides still hash-partition on pk) and AQE skew
     # splitting still applies.  Memory contract: see docstring.
-    s = source.select(*cols)
+    s = source.selectExpr(*map(q, cols))
     if build_source:
         s = s.hint("shuffle_hash")
     s = s.alias("s")
 
-    joined = t.join(s, F.col(f"t.{pk}") == F.col(f"s.{pk}"), "full_outer")
+    joined = t.join(s, F.col(f"t.{q(pk)}") == F.col(f"s.{q(pk)}"), "full_outer")
 
     # parsed SQL strings (r14, guide §1.2): the per-column
     # when/otherwise Column builds cost ~6 py4j round-trips each at
     # plan-build time; the CASE trees below are the identical
     # expressions in one parse per output column
-    def q(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
     if null_safe:
         cursor_differs = (
             f"NOT (t.{q(cursor_col)} <=> s.{q(cursor_col)})"

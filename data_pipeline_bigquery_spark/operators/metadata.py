@@ -43,20 +43,20 @@ def zip_emitted_info(
     (``archivedAt=None``, ``associations='{}'`` — transformation.py:18-29).
     """
     if isinstance(emitted_at, str):
-        # one parsed selectExpr instead of 2-4 withColumn round-trip
-        # chains (r14, guide §1.2); CAST('<s>' AS TIMESTAMP) is the
-        # same tree F.lit(<s>).cast("timestamp") builds
-        exprs = [
-            "*",
-            f"CAST({sql_str_lit(emitted_at)} AS TIMESTAMP) AS emitted_at",
-            f"{sql_str_lit(emitted_id)} AS emitted_id",
-        ]
+        # parsed expressions instead of Column builds (r14, guide §1.2);
+        # CAST('<s>' AS TIMESTAMP) is the same tree
+        # F.lit(<s>).cast("timestamp") builds.  Each goes through
+        # withColumn, so a same-named input column is replaced in place,
+        # as the Column form below does.
+        exprs = {
+            "emitted_at": f"CAST({sql_str_lit(emitted_at)} AS TIMESTAMP)",
+            "emitted_id": sql_str_lit(emitted_id),
+        }
         if archived_defaults:
-            exprs += [
-                "CAST(NULL AS TIMESTAMP) AS archivedAt",
-                "'{}' AS associations",
-            ]
-        return df.selectExpr(*exprs)
+            exprs |= {"archivedAt": "CAST(NULL AS TIMESTAMP)", "associations": "'{}'"}
+        for name, sql in exprs.items():
+            df = df.withColumn(name, F.expr(sql))
+        return df
     out = df.withColumn("emitted_at", F.lit(emitted_at).cast("timestamp")).withColumn(
         "emitted_id", F.lit(emitted_id)
     )

@@ -12,11 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from data_pipeline_bigquery_spark.functions.sql import sql_str_lit
-
-
-def _q(name: str) -> str:
-    return "`" + name.replace("`", "``") + "`"
+from data_pipeline_bigquery_spark.functions.sql import sql_ident as q, sql_str_lit
 
 
 def version_row_number(
@@ -29,7 +25,8 @@ def version_row_number(
 
     One shuffle on ``partition_by``; at scale this is the same hash
     exchange an aggregation would need, so chains of window + groupBy on
-    the same keys reuse the exchange (Catalyst ReuseExchange).
+    the same keys reuse the exchange (Catalyst ReuseExchange).  An input
+    column named ``out_col`` is replaced in place, as ``withColumn`` does.
     """
     if all(isinstance(c, str) for c in order_by):
         # ONE parsed expression instead of a Column build per key/order
@@ -38,10 +35,10 @@ def version_row_number(
         # NULLS FIRST, so the window tree is identical
         rn = (
             f"row_number() OVER (PARTITION BY"
-            f" {', '.join(_q(c) for c in partition_by)}"
-            f" ORDER BY {', '.join(_q(c) for c in order_by)})"
+            f" {', '.join(q(c) for c in partition_by)}"
+            f" ORDER BY {', '.join(q(c) for c in order_by)})"
         )
-        return df.selectExpr("*", f"{rn} AS {_q(out_col)}")
+        return df.withColumn(out_col, F.expr(rn))
     w = Window.partitionBy(*partition_by).orderBy(
         *[F.col(c) if isinstance(c, str) else c for c in order_by]
     )
@@ -70,16 +67,15 @@ def group_concat(
         # version_row_number; the tree (collect_list window →
         # array_distinct → array_sort → concat_ws) is unchanged
         arr_sql = (
-            f"collect_list({_q(value)}) OVER (PARTITION BY"
-            f" {', '.join(_q(c) for c in partition_by)})"
+            f"collect_list({q(value)}) OVER (PARTITION BY"
+            f" {', '.join(q(c) for c in partition_by)})"
         )
         if distinct:
             arr_sql = f"array_distinct({arr_sql})"
         if sort:
             arr_sql = f"array_sort({arr_sql})"
-        return df.selectExpr(
-            "*", f"concat_ws({sql_str_lit(sep)}, {arr_sql}) AS {_q(out_col)}"
-        )
+        concat = f"concat_ws({sql_str_lit(sep)}, {arr_sql})"
+        return df.withColumn(out_col, F.expr(concat))
     v = value
     w = Window.partitionBy(*partition_by)
     arr = F.collect_list(v).over(w)

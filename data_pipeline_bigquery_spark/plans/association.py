@@ -15,7 +15,7 @@ import datetime as _dt
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from data_pipeline_bigquery_spark.functions.sql import sql_str_lit
+from data_pipeline_bigquery_spark.functions.sql import sql_ident as q, sql_str_lit
 from data_pipeline_bigquery_spark.operators.joins import anti_join
 from data_pipeline_bigquery_spark.operators.metadata import zip_emitted_info
 
@@ -49,9 +49,6 @@ def association_edges_plan(
     # the shuffle then moves 2 longs instead of 2 strings per row, and
     # the constant `type` column stays out of the grouping key.  The
     # cast is injective, so the distinct set is identical.
-    def q(name: str) -> str:
-        return "`" + name.replace("`", "``") + "`"
-
     df = edges.selectExpr(f"{q(from_col)} AS from_id", f"{q(to_col)} AS to_id")
     if not assume_distinct:
         df = df.distinct()

@@ -31,6 +31,8 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from data_pipeline_bigquery_spark.functions.sql import sql_ident
+
 
 def _ntz_output_boundary(
     fn: Callable[[SparkSession, str], DataFrame],
@@ -52,14 +54,11 @@ def _ntz_output_boundary(
         # and this wrapper runs inside the bench's timed region on every
         # timestamp-emitting key (r14 session 2, guide §1.2) — the
         # parsed expression tree is identical to the Column form
-        def q(name: str) -> str:
-            return "`" + name.replace("`", "``") + "`"
-
         return df.selectExpr(
             *[
-                f"CAST({q(f.name)} AS TIMESTAMP_NTZ) AS {q(f.name)}"
+                f"CAST({sql_ident(f.name)} AS TIMESTAMP_NTZ) AS {sql_ident(f.name)}"
                 if isinstance(f.dataType, T.TimestampType)
-                else q(f.name)
+                else sql_ident(f.name)
                 for f in df.schema.fields
             ]
         )

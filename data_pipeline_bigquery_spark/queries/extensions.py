@@ -157,6 +157,8 @@ def _aug_minhash_signatures(
     from data_pipeline_bigquery_spark.extensions.dedup_text import (
         DEFAULT_NUM_PERM,
         DEFAULT_SHINGLE_K,
+        DEFAULT_SHINGLE_STRIDE,
+        MINHASH_BASE_HASH_SQL as hash_wrap,
         MINHASH_MOD,
         minhash_perm_multiplier,
         shingle_array_sql,
@@ -164,8 +166,12 @@ def _aug_minhash_signatures(
     )
 
     K = DEFAULT_SHINGLE_K
-    hash_wrap = "cast(conv(substring(md5({s}), 1, 7), 16, 10) as long)"
-    base_arr = shingle_array_sql("__t", K, 1, elem_wrap=hash_wrap, prefolded=True)
+    # the copy's windows are the base array's from index 5 on only when
+    # every window start is kept: the slice offsets below assume stride 1
+    assert DEFAULT_SHINGLE_STRIDE == 1, "slice identity needs shingle stride 1"
+    base_arr = shingle_array_sql(
+        "__t", K, DEFAULT_SHINGLE_STRIDE, elem_wrap=hash_wrap, prefolded=True
+    )
     short_elem = hash_wrap.format(s=f"substring(__t, 5, {K})")
     copy_arr = (
         f"CASE WHEN length(__t) >= {K + 4} THEN slice(__base, 5, size(__base) - 4) "

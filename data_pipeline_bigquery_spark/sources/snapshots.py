@@ -9,7 +9,11 @@ immutable snapshot version under one prefix —
 
 with a per-version ``_COMMITTED`` marker as the read protocol: readers
 only ever look at marked versions, so they can never observe a
-half-written snapshot.  The WRITE protocol (round 6) stages data AND
+half-written snapshot.  A reader takes the version's schema from one
+data file's footer (``sources.lake.parquet_schema``, skipping hidden
+``_``/``.`` entries the way Spark's file index does), so no
+schema-inference job runs — the footer plays the part of a table
+format's schema metadata.  The WRITE protocol (round 6) stages data AND
 marker in a hidden ``.tmp-*`` dir and commits with ONE directory
 rename into ``v=N`` — rename-onto-existing fails, so two racing
 writers can't clobber each other (the loser just retries at N+1), a
@@ -57,6 +61,8 @@ from pyspark.sql import functions as F
 from data_pipeline_bigquery_spark.sources.lake import (
     advance_tag as _advance_tag,
     fs_and_path as _fs_and_path,
+    hadoop_path as _jpath,
+    parquet_schema as _parquet_schema,
     tagged_values as _tagged_values,
 )
 
@@ -75,16 +81,9 @@ def list_versions(spark: SparkSession, base: str) -> list[int]:
         m = re.fullmatch(r"v=(\d+)", name)
         if not m:
             continue
-        marker = spark._jvm.org.apache.hadoop.fs.Path(
-            st.getPath(), _MARKER
-        )
-        if fs.exists(marker):
+        if fs.exists(_jpath(spark, st.getPath(), _MARKER)):
             out.append(int(m.group(1)))
     return sorted(out)
-
-
-def _jpath(spark: SparkSession, parent, name: str):
-    return spark._jvm.org.apache.hadoop.fs.Path(parent, name)
 
 
 _LATEST_TAG = "_LATEST_"
@@ -117,7 +116,6 @@ def _commit_next_version(
     import uuid
 
     spark = df.sparkSession
-    jvm = spark._jvm
     uid = uuid.uuid4().hex
     tmp_name = f".tmp-{uid}"
     tmp = f"{base}/{tmp_name}"
@@ -127,9 +125,9 @@ def _commit_next_version(
     writer.parquet(tmp)
     fs, jbase = _fs_and_path(spark, base)
     if epoch_id is not None:
-        fs.create(jvm.org.apache.hadoop.fs.Path(f"{tmp}/_EPOCH_{epoch_id}")).close()
-    fs.create(jvm.org.apache.hadoop.fs.Path(f"{tmp}/_WRITER_{uid}")).close()
-    fs.create(jvm.org.apache.hadoop.fs.Path(f"{tmp}/{_MARKER}")).close()
+        fs.create(_jpath(spark, f"{tmp}/_EPOCH_{epoch_id}")).close()
+    fs.create(_jpath(spark, f"{tmp}/_WRITER_{uid}")).close()
+    fs.create(_jpath(spark, f"{tmp}/{_MARKER}")).close()
     _, jtmp = _fs_and_path(spark, tmp)
     if audit is not None:
         # write-audit-publish: the audit reads the STAGED files (the
@@ -301,16 +299,24 @@ def read_snapshot(
     if version is None:
         fs, _ = _fs_and_path(spark, base)
         for v in reversed(_tagged_values(spark, base, _LATEST_TAG)):
-            marker = _fs_and_path(spark, f"{base}/v={v}/{_MARKER}")[1]
-            if fs.exists(marker):
-                return spark.read.parquet(f"{base}/v={v}")
+            if fs.exists(_jpath(spark, f"{base}/v={v}/{_MARKER}")):
+                return _read_version(spark, base, v)
         versions = list_versions(spark, base)
         if not versions:
             raise FileNotFoundError(f"no committed snapshots under {base}")
-        return spark.read.parquet(f"{base}/v={versions[-1]}")
+        return _read_version(spark, base, versions[-1])
     if version not in list_versions(spark, base):
         raise FileNotFoundError(f"version {version} not committed in {base}")
-    return spark.read.parquet(f"{base}/v={version}")
+    return _read_version(spark, base, version)
+
+
+def _read_version(spark: SparkSession, base: str, v: int) -> DataFrame:
+    """One committed version's rows, read with the schema its footer
+    already holds, so no schema-inference job runs."""
+    path = f"{base}/v={v}"
+    schema = _parquet_schema(spark, path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def expire_snapshots(
@@ -332,10 +338,9 @@ def expire_snapshots(
         raise ValueError("keep_last must be >= 1")
     versions = list_versions(spark, base)
     doomed = versions[:-keep_last] if len(versions) > keep_last else []
-    jvm = spark._jvm
     for v in doomed:
         fs, vdir = _fs_and_path(spark, f"{base}/v={v}")
-        fs.delete(jvm.org.apache.hadoop.fs.Path(vdir, _MARKER), False)
+        fs.delete(_jpath(spark, vdir, _MARKER), False)
         fs.delete(vdir, True)
     # marker-less orphans strictly below the oldest retained version
     # can't belong to a live writer (writers only target versions above
@@ -431,7 +436,6 @@ def commit_epoch_snapshot(batch_df: DataFrame, base: str, epoch_id: int) -> int 
     the empty file.  Returns the version written, or None when the
     epoch was already committed."""
     spark = batch_df.sparkSession
-    jvm = spark._jvm
     fs, jbase = _fs_and_path(spark, base)
     # fast guard that SURVIVES RETENTION: the base-level high-water mark
     # outlives expired version dirs, so a stream restarted from an old
@@ -443,10 +447,8 @@ def commit_epoch_snapshot(batch_df: DataFrame, base: str, epoch_id: int) -> int 
         for st in fs.listStatus(jbase):
             if not st.getPath().getName().startswith("v="):
                 continue
-            epoch_marker = jvm.org.apache.hadoop.fs.Path(
-                st.getPath(), f"_EPOCH_{epoch_id}"
-            )
-            committed = jvm.org.apache.hadoop.fs.Path(st.getPath(), _MARKER)
+            epoch_marker = _jpath(spark, st.getPath(), f"_EPOCH_{epoch_id}")
+            committed = _jpath(spark, st.getPath(), _MARKER)
             if fs.exists(epoch_marker) and fs.exists(committed):
                 return None  # replayed epoch — already committed
     v = _commit_next_version(batch_df, base, epoch_id=epoch_id)

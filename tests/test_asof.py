@@ -51,3 +51,38 @@ def test_asof_tolerance(spark):
     assert out[2]["asof_v"] == 10.0    # 1h old — at the limit, kept
     assert out[4]["asof_v"] is None    # 3h old — nulled by tolerance
     assert out[4]["asof_ts"] is None
+
+
+def _lit_tolerance_reference(left, right, tol):
+    """The tolerance rule as the Column form spelled it,
+    ``staleness <= F.lit(tol)``, applied to the untolerated match."""
+    from pyspark.sql import functions as F
+
+    out = asof_join(left, right, "k", "ts", ["v"])
+    stale = F.unix_seconds("ts") - F.unix_seconds("asof_ts")
+    fresh = stale <= F.lit(tol)
+    return {
+        r["id"]: (r["asof_ts"], r["asof_v"])
+        for r in out.select(
+            "id",
+            F.when(fresh, F.col("asof_ts")).alias("asof_ts"),
+            F.when(fresh, F.col("asof_v")).alias("asof_v"),
+        ).collect()
+    }
+
+
+def test_asof_fractional_tolerance_is_not_truncated(spark):
+    """``int(tolerance_s)`` turned -0.5 into 0, which keeps the exact
+    (zero-staleness) match that a negative tolerance rules out."""
+    left, right = _frames(spark)
+    for tol in (3600.5, 0.5, -0.5, -3599.5):
+        got = {
+            r["id"]: (r["asof_ts"], r["asof_v"])
+            for r in asof_join(left, right, "k", "ts", ["v"], tolerance_s=tol).collect()
+        }
+        assert got == _lit_tolerance_reference(left, right, tol), tol
+    neg = {
+        r["id"]: r["asof_v"]
+        for r in asof_join(left, right, "k", "ts", ["v"], tolerance_s=-0.5).collect()
+    }
+    assert neg[3] is None  # equal-ts match has staleness 0 > -0.5
