@@ -5,9 +5,10 @@ is set for distributed execution:
 
 * AQE on — runtime coalescing, skew-join splitting, dynamic join strategy
   switches survive a 1000-executor deployment unchanged.
-* ``spark.sql.shuffle.partitions`` defaults to ~2-3× local cores; on a real
-  cluster AQE coalesces or the deployer overrides via ``SPARK_CONF``-style
-  env.  Nothing in the engine assumes a partition count.
+* ``spark.sql.shuffle.partitions`` defaults to ``max(cores, 8)``; AQE
+  starts each shuffle at 4× that and coalesces down.  On a real cluster
+  the deployer passes ``shuffle_partitions`` or ``extra_conf``.  Nothing
+  in the engine assumes a partition count.
 * session timezone pinned UTC — the reference mixes UTC / GMT+7 / naive
   timestamps (SURVEY §7.4); the engine standardizes on UTC internally and
   exposes explicit conversion ops in :mod:`.functions.timestamps`.
@@ -21,69 +22,6 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "data_pipeline_bigquery_spark"
-
-
-def _patch_py4j_nodelay() -> None:
-    """Disable Nagle on the driver's py4j command channel.
-
-    py4j opens its Python→JVM sockets without TCP_NODELAY, so every
-    command/response pair (one per DataFrame API call) can sit behind
-    Nagle + delayed-ACK coalescing.  Measured on this box: 0.40 ms →
-    0.23 ms per round-trip (−42%), and an expression-heavy plan build
-    issues hundreds of round-trips (dedup_minhash_lsh: 336).  This is
-    pure driver-side latency — worker I/O is untouched — and applies
-    identically under spark-submit on a cluster (the py4j channel is
-    always driver-local).  Opt out with SPARK_GRAFT_PY4J_NODELAY=0.
-    """
-    if os.environ.get("SPARK_GRAFT_PY4J_NODELAY", "1") == "0":
-        return
-    import socket as _socket
-
-    # pin-thread (clientserver) mode — PySpark's default gateway
-    try:
-        from py4j import clientserver as _cs
-
-        target = _cs.ClientServerConnection.connect_to_java_server
-        if not getattr(target, "_nodelay_patched", False):
-
-            def connect_with_nodelay(self, _orig=target):
-                _orig(self)
-                try:
-                    self.socket.setsockopt(
-                        _socket.IPPROTO_TCP, _socket.TCP_NODELAY, 1
-                    )
-                except OSError:
-                    pass  # e.g. non-TCP/ssl-wrapped edge; latency fix is best-effort
-
-            connect_with_nodelay._nodelay_patched = True
-            _cs.ClientServerConnection.connect_to_java_server = connect_with_nodelay
-    except Exception:
-        pass  # never let a latency tweak break session construction
-
-    # legacy gateway mode (PYSPARK_PIN_THREAD=false): connections are
-    # py4j.java_gateway.GatewayConnection, opened lazily by start() —
-    # without this branch the opt-in env var would silently cover only
-    # one of the two gateway modes
-    try:
-        from py4j import java_gateway as _jg
-
-        start_target = _jg.GatewayConnection.start
-        if not getattr(start_target, "_nodelay_patched", False):
-
-            def start_with_nodelay(self, _orig=start_target):
-                out = _orig(self)
-                try:
-                    self.socket.setsockopt(
-                        _socket.IPPROTO_TCP, _socket.TCP_NODELAY, 1
-                    )
-                except OSError:
-                    pass
-                return out
-
-            start_with_nodelay._nodelay_patched = True
-            _jg.GatewayConnection.start = start_with_nodelay
-    except Exception:
-        pass
 
 
 def get_spark(
@@ -115,10 +53,6 @@ def get_spark(
     # with spare cores per task override via the same env var.
     os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
     os.environ.setdefault("OMP_NUM_THREADS", "1")
-
-    # must run before the gateway's first connection is opened; also
-    # covers sessions created elsewhere once this module is imported
-    _patch_py4j_nodelay()
 
     builder = (
         SparkSession.builder.master(master)
@@ -162,11 +96,9 @@ def get_spark(
         # the local partition count flip Spark onto the M x R path.
         # Shuffles with R <= 7 (below the engine's 8-partition floor;
         # only explicit tiny repartitions in tests) keep the bypass
-        # path, where it genuinely wins.  Deployers override via env.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_THRESHOLD", "7"),
-        )
+        # path, where it genuinely wins.  Deployers override via
+        # ``extra_conf``.
+        .config("spark.shuffle.sort.bypassMergeThreshold", "7")
         .config("spark.sql.session.timeZone", "UTC")
         # pin ANSI to Spark 4's default so the engine doesn't float on
         # the installed build's flag; the registry is additionally
@@ -198,14 +130,4 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    # connections opened before the patch (attaching to a pre-existing
-    # session) still carry Nagle — fix them in place, best-effort
-    if os.environ.get("SPARK_GRAFT_PY4J_NODELAY", "1") != "0":
-        import socket as _socket
-
-        try:
-            for conn in list(spark.sparkContext._gateway._gateway_client.deque):
-                conn.socket.setsockopt(_socket.IPPROTO_TCP, _socket.TCP_NODELAY, 1)
-        except Exception:
-            pass
     return spark

@@ -317,11 +317,8 @@ def compact_lake(
 
     df = spark.read.parquet(path)
 
-    def _fs_and_path(p: str):
-        return fs_and_path(spark, p)
-
     def _parquet_files(p: str):
-        fs, jpath = _fs_and_path(p)
+        fs, jpath = fs_and_path(spark, p)
         it = fs.listFiles(jpath, True)
         out = []
         while it.hasNext():
@@ -340,9 +337,9 @@ def compact_lake(
     )
     tmp = path.rstrip("/") + "_compact"
     write_lake(shaped, tmp, mode="overwrite", partition_by=partition_by)
-    fs, live = _fs_and_path(path)
+    fs, live = fs_and_path(spark, path)
     fs.delete(live, True)
-    tmp_fs, tmp_path = _fs_and_path(tmp)
+    tmp_fs, tmp_path = fs_and_path(spark, tmp)
     tmp_fs.rename(tmp_path, live)
     return len(_parquet_files(path)[2])
 
@@ -472,5 +469,6 @@ def delete_by_keys_rewrite(
             fs.rename(old, live)  # restore before failing
             raise RuntimeError("swap rename failed; live file restored")
         _must(fs.delete(old, False), "backup cleanup")
-    fs_and_path(spark, tmp)[0].delete(fs_and_path(spark, tmp)[1], True)
+    tmp_fs, tmp_dir = fs_and_path(spark, tmp)
+    tmp_fs.delete(tmp_dir, True)
     return {"files_rewritten": len(affected), "rows_deleted": n_deleted}

@@ -354,7 +354,7 @@ def expire_snapshots(
         for st in fs.listStatus(jbase):
             name = st.getPath().getName()
             m = re.fullmatch(r"v=(\d+)", name)
-            if m and int(m.group(1)) < kept[0] and int(m.group(1)) not in kept:
+            if m and int(m.group(1)) < kept[0]:
                 if not fs.exists(_jpath(spark, st.getPath(), _MARKER)):
                     fs.delete(st.getPath(), True)
     return doomed

@@ -1,6 +1,6 @@
 """state/cursor.py: the Arrow-local cursor append, the filename-tagged
 max-cursor pointer, its scan fallback, and crash convergence of the
-sync loop's state step."""
+sync loop when a batch fails at a step boundary and is re-run."""
 
 from __future__ import annotations
 
@@ -186,6 +186,7 @@ def test_pointer_crash_leaves_max_behind_log_and_retry_converges(
 
 
 LOOKBACK = dt.timedelta(days=1)
+KEEP_LAST = 2
 SCHEMA = "k long, ts timestamp, v string"
 BATCHES = [
     [(1, TS(2024, 1, 2), "a2"), (4, TS(2024, 1, 2), "d"), (4, TS(2024, 1, 3), "d2")],
@@ -195,11 +196,32 @@ BATCHES = [
 ]
 
 
-def _sync(spark, root, crash_batch=None):
+class InjectedCrash(RuntimeError):
+    """The one-shot failure a test injects into one sync batch."""
+
+
+def _raise_once(fn):
+    """``fn``, except that its first call raises :class:`InjectedCrash`
+    instead of running."""
+    fired = []
+
+    def once(*args, **kwargs):
+        if not fired:
+            fired.append(True)
+            raise InjectedCrash(fn.__name__)
+        return fn(*args, **kwargs)
+
+    return once
+
+
+def _sync(spark, root, arm=None):
     """The cursor-driven sync loop: max cursor -> lookback filter and
-    latest-wins dedup -> MERGE into the snapshot -> cursor append.
-    ``crash_batch`` fails that batch between the MERGE commit and the
-    cursor append once, then re-runs it."""
+    latest-wins dedup -> MERGE into the snapshot -> cursor append ->
+    retention.  ``arm`` installs a one-shot fault just before batch 1,
+    which must then fail; the batch is re-run.
+
+    Returns the final rows, the max cursor and the number of staging
+    dirs ``vacuum_snapshots`` swept at the end."""
     from data_pipeline_bigquery_spark.plans import entity_sync_plan
     from data_pipeline_bigquery_spark.sources import snapshots
 
@@ -208,7 +230,7 @@ def _sync(spark, root, crash_batch=None):
     snapshots.write_snapshot(spark.createDataFrame(base, SCHEMA), store)
     cursors.append("orders", TS(2024, 1, 1), EMITTED, "seed")
 
-    def run(b, crash):
+    def run(b):
         cursor = cursors.max_cursor("orders")
         source = entity_sync_plan(
             spark.createDataFrame(BATCHES[b], SCHEMA),
@@ -219,26 +241,96 @@ def _sync(spark, root, crash_batch=None):
             emitted_id=f"batch-{b}",
         )
         snapshots.merge_into_snapshot(spark, store, source, pk="k", cursor_col="ts")
-        if crash:
-            raise RuntimeError("crashed between MERGE and cursor append")
         batch_max = max(r[1] for r in BATCHES[b])
         cursors.append("orders", batch_max, EMITTED + dt.timedelta(seconds=b), f"batch-{b}")
+        snapshots.expire_snapshots(spark, store, KEEP_LAST)
 
     for b in range(len(BATCHES)):
-        if b == crash_batch:
-            with pytest.raises(RuntimeError):
-                run(b, crash=True)
-        run(b, crash=False)
+        if arm is not None and b == 1:
+            arm()
+            with pytest.raises(InjectedCrash):
+                run(b)
+        run(b)
+    swept = snapshots.vacuum_snapshots(spark, store)
+    left = os.listdir(store)
+    assert not [n for n in left if n.startswith(".tmp-")]
+    # no marker-less version dir survives retention
+    on_disk = sorted(int(n[2:]) for n in left if n.startswith("v="))
+    assert on_disk == snapshots.list_versions(spark, store)
     final = snapshots.read_snapshot(spark, store)
-    return sorted(tuple(r) for r in final.collect()), cursors.max_cursor("orders")
+    return sorted(tuple(r) for r in final.collect()), cursors.max_cursor("orders"), swept
 
 
-def test_sync_batch_crash_before_cursor_append_converges(spark, tmp_path):
-    want, want_cursor = _sync(spark, tmp_path / "clean")
-    got, got_cursor = _sync(spark, tmp_path / "crash", crash_batch=1)
-    assert got == want
-    assert got_cursor == want_cursor == TS(2024, 1, 6)
-    assert {r[0]: r[2] for r in want} == {
+@pytest.fixture(scope="module")
+def clean_sync(spark, tmp_path_factory):
+    rows, cursor, swept = _sync(spark, tmp_path_factory.mktemp("clean"))
+    assert swept == 0
+    assert cursor == TS(2024, 1, 6)
+    assert {r[0]: r[2] for r in rows} == {
         1: "a2", 2: "b2", 3: "c2", 4: "d2", 5: "e", 6: "f"
     }
+    return rows, cursor
 
+
+def test_sync_batch_crash_before_cursor_append_converges(
+    spark, tmp_path, monkeypatch, clean_sync
+):
+    def arm():
+        monkeypatch.setattr(CursorStore, "append", _raise_once(CursorStore.append))
+
+    rows, cursor, swept = _sync(spark, tmp_path, arm)
+    assert (rows, cursor) == clean_sync
+    assert swept == 0
+
+
+def test_sync_batch_crash_before_commit_rename_converges(
+    spark, tmp_path, monkeypatch, clean_sync
+):
+    """The data is staged and the ``_LATEST_`` pointer is about to move:
+    no version is committed, and the staging dir is left for vacuum."""
+    from data_pipeline_bigquery_spark.sources import snapshots
+
+    def arm():
+        monkeypatch.setattr(
+            snapshots, "_advance_tag", _raise_once(snapshots._advance_tag)
+        )
+
+    rows, cursor, swept = _sync(spark, tmp_path, arm)
+    assert (rows, cursor) == clean_sync
+    assert swept == 1
+
+
+def test_sync_batch_crash_mid_expire_converges(
+    spark, tmp_path, monkeypatch, clean_sync
+):
+    """Retention fails after it deleted the oldest version's marker and
+    before its data dir; the re-run's retention reclaims the orphan."""
+    from data_pipeline_bigquery_spark.sources import snapshots
+
+    fs_and_path, crashed = snapshots._fs_and_path, []
+
+    class CrashAfterMarkerDelete:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+        def delete(self, path, recursive):
+            out = self.fs.delete(path, recursive)
+            if not crashed and path.getName() == snapshots._MARKER:
+                crashed.append(path.getParent().getName())
+                raise InjectedCrash("expire_snapshots")
+            return out
+
+    def crashing_fs_and_path(spark, p):
+        fs, jpath = fs_and_path(spark, p)
+        return CrashAfterMarkerDelete(fs), jpath
+
+    def arm():
+        monkeypatch.setattr(snapshots, "_fs_and_path", crashing_fs_and_path)
+
+    rows, cursor, swept = _sync(spark, tmp_path, arm)
+    assert crashed == ["v=1"]
+    assert (rows, cursor) == clean_sync
+    assert swept == 0

@@ -7,11 +7,9 @@ local 32x128 geometry), which is what a production-scale partition
 count (R > 200) never does; pinning
 ``spark.shuffle.sort.bypassMergeThreshold`` below the engine's
 8-partition shuffle floor makes the local writer match the at-scale
-one.  ``SPARK_GRAFT_BYPASS_THRESHOLD`` is the deployer override."""
+one.  Deployers override it through ``get_spark(extra_conf=...)``."""
 
 from __future__ import annotations
-
-import os
 
 
 def test_bypass_threshold_below_engine_shuffle_floor(spark):
@@ -19,20 +17,10 @@ def test_bypass_threshold_below_engine_shuffle_floor(spark):
     # session.get_spark floors shuffle_partitions at 8 and starts AQE
     # at 4x that, so any real exchange has R >= 8 > thr: sort writer.
     assert thr < 8
-    assert thr == int(os.environ.get("SPARK_GRAFT_BYPASS_THRESHOLD", "7"))
+    assert thr == 7
 
 
-def test_env_override_reaches_builder():
-    """The conf value must come from SPARK_GRAFT_BYPASS_THRESHOLD at
-    get_spark call time (the deployer knob), not a baked literal —
-    pinned at the source level so a refactor can't silently hard-code
-    it (a second SparkSession per test run is too expensive to prove
-    it end-to-end here; the sf0.01/sf0.1 bench CLI runs exercise the
-    default path every round)."""
-    import inspect
-
-    import data_pipeline_bigquery_spark.session as sess
-
-    src = inspect.getsource(sess.get_spark)
-    assert "spark.shuffle.sort.bypassMergeThreshold" in src
-    assert "SPARK_GRAFT_BYPASS_THRESHOLD" in src
+def test_dataframe_debugging_off(spark):
+    """The other speed setting the session keeps: no per-call Python
+    stack capture while plans are built."""
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
