@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import pytest
 
@@ -53,3 +54,17 @@ def spark():
     s = get_spark(app_name="tests", master="local[8]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+def jobs_started(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts, counted under a job group of
+    its own once the listener bus has drained."""
+    sc = spark.sparkContext
+    group = f"jobs-started-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))

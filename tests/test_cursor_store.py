@@ -1,28 +1,34 @@
-"""state/cursor.py: the Arrow-local cursor append, the filename-tagged
-max-cursor pointer, its scan fallback, and crash convergence of the
-sync loop when a batch fails at a step boundary and is re-run."""
+"""state/cursor.py: the job-free cursor append and the files it
+publishes, the filename-tagged max-cursor pointer, its scan fallback,
+and crash convergence of the sync loop when a batch fails at a step
+boundary and is re-run."""
 
 from __future__ import annotations
 
 import datetime as dt
 import os
 import time
+from pathlib import Path
 
+import duckdb
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from data_pipeline_bigquery_spark.catalog import CURSOR_SCHEMA
+from data_pipeline_bigquery_spark.sources.lake import parquet_schema
 from data_pipeline_bigquery_spark.state import cursor as cursor_mod
 from data_pipeline_bigquery_spark.state.cursor import CursorStore
+from tests.conftest import jobs_started
 
 TS = dt.datetime
 EMITTED = TS(2026, 1, 1)
 
 
 def _row_path_append(spark, path, object_name, cursor_date, emitted_at, emitted_id):
-    """The pickled-``Row`` append the store used before the Arrow path:
-    the reference encoding the stored microseconds must match."""
+    """The pickled-``Row`` append through a Spark write job: the
+    reference file the store's files must match."""
     spark.createDataFrame(
         [
             Row(
@@ -80,6 +86,43 @@ def pacific_tz():
         time.tzset()
 
 
+def _duckdb_max(path):
+    return duckdb.sql(
+        f"SELECT max(cursor_date) FROM read_parquet('{path}/*.parquet')"
+    ).fetchone()[0]
+
+
+def _timestamp_columns(path):
+    """(name, physical type, logical type) of every timestamp column in
+    every parquet file of the log."""
+    out = set()
+    for f in Path(path).glob("*.parquet"):
+        schema = pq.ParquetFile(f).schema
+        for i in range(len(schema)):
+            col = schema.column(i)
+            if col.name in ("emitted_at", "cursor_date"):
+                out.add((col.name, col.physical_type, str(col.logical_type)))
+    return out
+
+
+def _spark_footer_keys(path):
+    """The ``org.apache.spark.*`` footer entries of the log's files."""
+    return {
+        (k, v)
+        for f in Path(path).glob("*.parquet")
+        for k, v in pq.ParquetFile(f).metadata.metadata.items()
+        if k.startswith(b"org.apache.spark.")
+    }
+
+
+OUTPUT_TS_TYPE = "spark.sql.parquet.outputTimestampType"
+# read modes that rebase files a reader takes as not written by Spark 3+
+LEGACY_READ = (
+    "spark.sql.parquet.int96RebaseModeInRead",
+    "spark.sql.parquet.datetimeRebaseModeInRead",
+)
+
+
 def test_arrow_append_matches_row_path_non_utc_pre_epoch(spark, tmp_path, pacific_tz):
     rows = [
         ("orders", TS(1969, 7, 20, 20, 17, 40, 123456), TS(1955, 11, 5, 6, 0, 0, 1), "moon"),
@@ -88,30 +131,68 @@ def test_arrow_append_matches_row_path_non_utc_pre_epoch(spark, tmp_path, pacifi
         # so even the Row path does not store them deterministically
         ("orders", TS(2024, 7, 4, 23, 59, 59, 999999), TS(2024, 12, 31, 1, 30), "dst"),
         ("deals", TS(1901, 1, 1), EMITTED, "old"),
+        # pre-1900 (local mean time in TZ) and pre-Gregorian: where a
+        # reader's calendar rebase applies unless the footer says Spark
+        # wrote the file in the proleptic calendar
+        ("ancient", TS(1850, 3, 1, 12, 0, 0, 5), TS(1500, 1, 1, 0, 0, 7), "pre1900"),
     ]
-    new, old = str(tmp_path / "arrow"), str(tmp_path / "row")
-    store = CursorStore(spark, new)
-    for obj, cur, at, eid in rows:
-        store.append(obj, cur, at, eid)
-        _row_path_append(spark, old, obj, cur, at, eid)
-    assert _stored(spark, new) == _stored(spark, old)
-    for obj in ("orders", "deals"):
-        assert store.max_cursor(obj) == _scanned_max(spark, old, obj)
-    assert store.max_cursor("deals") == TS(1901, 1, 1)
+    held = {k: spark.conf.get(k) for k in (OUTPUT_TS_TYPE, *LEGACY_READ)}
+    try:
+        for ts_type, physical in (
+            ("INT96", "INT96"),
+            ("TIMESTAMP_MICROS", "INT64"),
+            ("TIMESTAMP_MILLIS", "INT64"),
+        ):
+            spark.conf.set(OUTPUT_TS_TYPE, ts_type)
+            new, old = str(tmp_path / ts_type / "arrow"), str(tmp_path / ts_type / "row")
+            store = CursorStore(spark, new)
+            for obj, cur, at, eid in rows:
+                store.append(obj, cur, at, eid)
+                _row_path_append(spark, old, obj, cur, at, eid)
+            assert _stored(spark, new) == _stored(spark, old)
+            for obj in ("orders", "deals", "ancient"):
+                assert store.max_cursor(obj) == _scanned_max(spark, old, obj)
+            assert store.max_cursor("deals") == TS(1901, 1, 1)
+            # file level: what readers other than this store see
+            assert parquet_schema(spark, new) == parquet_schema(spark, old)
+            assert parquet_schema(spark, new) == spark.read.parquet(old).schema
+            columns = _timestamp_columns(new)
+            assert columns == _timestamp_columns(old)
+            assert {c[1] for c in columns} == {physical}, ts_type
+            assert _spark_footer_keys(new) == _spark_footer_keys(old)
+            for k in LEGACY_READ:
+                spark.conf.set(k, "LEGACY")
+            assert _stored(spark, new) == _stored(spark, old)
+            for k in LEGACY_READ:
+                spark.conf.set(k, held[k])
+            got, want = _duckdb_max(new), _duckdb_max(old)
+            assert (got, got.tzinfo) == (want, want.tzinfo)
+            if ts_type == "INT96":
+                assert got.tzinfo is None
+    finally:
+        for k, v in held.items():
+            spark.conf.set(k, v)
 
 
-def test_append_plans_as_local_table_scan(spark, tmp_path):
-    """The pickled-Row path planned ``Scan ExistingRDD`` and started a
-    Python worker for every cursor write."""
-    store = CursorStore(spark, str(tmp_path / "c"))
-    plan = (
-        store._row("orders", 0, 0, "x")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+def test_append_starts_no_spark_job(spark, tmp_path):
+    """The row is encoded on the driver and published by a rename: a
+    cursor commit runs no Spark job."""
+    path = str(tmp_path / "c")
+    # the counter sees the job a Spark write starts
+    assert (
+        jobs_started(
+            spark,
+            lambda: _row_path_append(spark, str(tmp_path / "row"), "o", TS(2024, 1, 1), EMITTED, "r"),
+        )
+        >= 1
     )
-    assert "LocalTableScan" in plan
-    assert "ExistingRDD" not in plan
+    store = CursorStore(spark, path)
+    # an object's first append seeds its pointer from a scan of the log
+    store.append("o", TS(2024, 1, 1), EMITTED, "seed")
+    assert jobs_started(spark, lambda: store.append("o", TS(2024, 2, 1), EMITTED, "a")) == 0
+    assert jobs_started(spark, lambda: store.append("o", TS(2024, 1, 5), EMITTED, "b")) == 0
+    assert store.max_cursor("o") == TS(2024, 2, 1)
+    assert len(_stored(spark, path)) == 3
 
 
 def test_older_cursor_does_not_lower_max(spark, tmp_path):
@@ -334,3 +415,53 @@ def test_sync_batch_crash_mid_expire_converges(
     assert crashed == ["v=1"]
     assert (rows, cursor) == clean_sync
     assert swept == 0
+
+
+def test_sync_batch_crash_before_cursor_rename_converges(
+    spark, tmp_path, monkeypatch, clean_sync
+):
+    """The cursor row is written under its hidden name and not yet
+    renamed into the log: the run's row is missing, the re-run adds it,
+    and the leftover hidden file stays out of every reader."""
+    from data_pipeline_bigquery_spark.sources import lake
+
+    fs_and_path, crashed = cursor_mod.fs_and_path, []
+
+    class CrashBeforeRename:
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+        def rename(self, src, dst):
+            if not crashed:
+                crashed.append(src.getName())
+                raise InjectedCrash("cursor rename")
+            return self.fs.rename(src, dst)
+
+    def crashing_fs_and_path(spark, p):
+        fs, jpath = fs_and_path(spark, p)
+        return CrashBeforeRename(fs), jpath
+
+    def arm():
+        monkeypatch.setattr(cursor_mod, "fs_and_path", crashing_fs_and_path)
+
+    rows, cursor, swept = _sync(spark, tmp_path, arm)
+    assert (rows, cursor) == clean_sync
+    assert swept == 0
+
+    log = str(tmp_path / "cursor")
+    assert [n for n in os.listdir(log) if n.startswith(".tmp-")] == crashed
+    runs = ["batch-0", "batch-1", "batch-2", "seed"]
+    assert sorted(r[1] for r in _stored(spark, log)) == runs
+    assert parquet_schema(spark, log) == spark.read.parquet(log).schema
+    fs, root = fs_and_path(spark, log)
+    assert lake._first_data_file(fs, root)[1].getName().startswith("part-")
+    assert duckdb.sql(
+        f"SELECT count(*), max(cursor_date) FROM read_parquet('{log}/*.parquet')"
+    ).fetchone() == (len(runs), clean_sync[1])
+    for name in os.listdir(log):
+        if name.startswith("_CURSOR_"):
+            os.remove(os.path.join(log, name))
+    assert CursorStore(spark, log).max_cursor("orders") == clean_sync[1]

@@ -15,6 +15,7 @@ from data_pipeline_bigquery_spark import catalog
 from data_pipeline_bigquery_spark.sources import snapshots
 from data_pipeline_bigquery_spark.sources.lake import parquet_schema
 from data_pipeline_bigquery_spark.state.cursor import CursorStore
+from tests.conftest import jobs_started
 
 SF_MID = "/root/testdata/sf0.01"
 
@@ -86,18 +87,6 @@ def test_footer_pick_skips_hidden_dirs_and_empty_dirs(spark, tmp_path):
     assert parquet_schema(spark, str(tmp_path / "missing")) is None
 
 
-def _jobs_started(spark, fn) -> int:
-    sc = spark.sparkContext
-    group = f"footer-schema-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_sync_reads_start_no_spark_job(spark, tmp_path):
     base = str(tmp_path / "snap")
     snapshots.write_snapshot(_orders(spark), base)
@@ -105,11 +94,11 @@ def test_sync_reads_start_no_spark_job(spark, tmp_path):
     changes = str(tmp_path / "changes")
     _orders(spark, 30).write.parquet(os.path.join(changes, "batch.parquet"))
     # the counter sees the job an inferred read starts
-    assert _jobs_started(spark, lambda: spark.read.parquet(f"{base}/v=1")) >= 1
-    assert _jobs_started(spark, lambda: snapshots.read_snapshot(spark, base)) == 0
-    assert _jobs_started(spark, lambda: snapshots.read_snapshot(spark, base, 1)) == 0
+    assert jobs_started(spark, lambda: spark.read.parquet(f"{base}/v=1")) >= 1
+    assert jobs_started(spark, lambda: snapshots.read_snapshot(spark, base)) == 0
+    assert jobs_started(spark, lambda: snapshots.read_snapshot(spark, base, 1)) == 0
     catalog.invalidate_plan_cache(spark)
-    assert _jobs_started(spark, lambda: catalog.load(spark, changes, "batch")) == 0
+    assert jobs_started(spark, lambda: catalog.load(spark, changes, "batch")) == 0
     assert snapshots.read_snapshot(spark, base).count() == 50
     latest = snapshots.read_snapshot(spark, base)
     assert latest.schema == spark.read.parquet(f"{base}/v={v}").schema
